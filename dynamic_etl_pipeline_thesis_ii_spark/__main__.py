@@ -79,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
                    "reports": result.get("reports", {}),
                    "out": args.out}
         print(json.dumps(summary, default=str))
-        return 0 if result["status"] == "complete" else 1
+        return 0 if result["status"] in ("complete", "explained") else 1
     result = pipe.run(args.query)
 
     summary = {"status": result["status"],

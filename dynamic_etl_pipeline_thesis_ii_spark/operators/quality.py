@@ -68,6 +68,13 @@ def train_quality_classifier(labeled: DataFrame, text_col: str = "text",
     return pipe.fit(prepped)
 
 
+def load_quality_classifier(path: str):
+    """Reload a model saved from :func:`train_quality_classifier`
+    (Spark ML's native loader)."""
+    from pyspark.ml import PipelineModel
+    return PipelineModel.load(path)
+
+
 def score_quality(df: DataFrame, model, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """(id, quality_prob) — P(label=1) per doc, one scan."""

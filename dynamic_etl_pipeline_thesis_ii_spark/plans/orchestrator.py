@@ -25,17 +25,33 @@ from __future__ import annotations
 
 import re
 import time
-from typing import Any, Callable, Optional, Protocol
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Any, Callable, Optional, Protocol, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.functions.compiler import apply_features
 from dynamic_etl_pipeline_thesis_ii_spark.functions.dsl import validate_dsl
 from dynamic_etl_pipeline_thesis_ii_spark.functions.registry import FEATURE_REGISTRY
+from dynamic_etl_pipeline_thesis_ii_spark.operators import bpe as BPE
+from dynamic_etl_pipeline_thesis_ii_spark.operators import dedup as D
+from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal as M
+from dynamic_etl_pipeline_thesis_ii_spark.operators import packing as PK
+from dynamic_etl_pipeline_thesis_ii_spark.operators import quality as Q
+from dynamic_etl_pipeline_thesis_ii_spark.operators import sampling as SA
+from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as S
+from dynamic_etl_pipeline_thesis_ii_spark.operators import text as T
+from dynamic_etl_pipeline_thesis_ii_spark.operators import unigram as U
+from dynamic_etl_pipeline_thesis_ii_spark.operators import web as WB
 from dynamic_etl_pipeline_thesis_ii_spark.operators.cleaning import clean_dataframe
 from dynamic_etl_pipeline_thesis_ii_spark.operators.integration import integrate
+from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite
+from dynamic_etl_pipeline_thesis_ii_spark.sources import archives, pdf, sinks, warc
+from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
 from dynamic_etl_pipeline_thesis_ii_spark.plans.contracts import (
     APIResult,
     ExecutionPlan,
@@ -53,6 +69,39 @@ from dynamic_etl_pipeline_thesis_ii_spark.plans.validators import (
 )
 
 ProgressFn = Callable[[str, dict], None]
+# what a dataops handler returns: (outputs, report, rows). ``rows`` is
+# the published row count, or the whole ``publish`` event payload when
+# that is not {rows, path=output_path}.
+Handled = tuple[list, dict, Union[int, None, dict]]
+
+# 'explain: <query>' — the dry-run face, shared by run_dataops and the
+# serve runner so every explain (finance text included) stays a dry run
+EXPLAIN_RE = re.compile(r"^\s*explain\s*[:,]?\s+(.*)$",
+                        re.IGNORECASE | re.DOTALL)
+
+
+class Rejected(Exception):
+    """A dataops plan the engine cannot run; ``str(exc)`` is the
+    actionable reason the run's rejected result carries."""
+
+
+@contextmanager
+def _rejecting(reason: str, cause: bool = True):
+    """Turn any failure inside the block (an unreadable store, a
+    malformed path) into :class:`Rejected` — ``reason`` plus the
+    failure's own text unless ``cause`` is False."""
+    try:
+        yield
+    except Exception as exc:
+        raise Rejected(f"{reason}: {exc}" if cause else reason) from exc
+
+
+def _rows(frame: DataFrame, table: str) -> int:
+    """Row count of a source table; an empty one rejects."""
+    n = frame.count()
+    if n == 0:
+        raise Rejected(f"{table} table is empty")
+    return n
 
 # X2 deterministic fallback: enrichment keyword -> default DSL params
 # (the reference's LLM translator fills the same defaults from its
@@ -98,7 +147,6 @@ class FixtureFetcher:
         self.sf_dir = sf_dir
 
     def _daily(self) -> DataFrame:
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
         ev = Catalog(self.spark, self.sf_dir).events
         return (ev.groupBy(F.col("ts").cast("date").alias("timestamp"))
                 .agg(F.round(F.avg("value"), 4).alias("base"),
@@ -177,8 +225,6 @@ class Pipeline:
         5 req/min) answer concurrent bursts with HTTP-200 rate-limit
         notes that would degrade into per-request parse failures.
         ``max_concurrency=1`` is strictly sequential."""
-        from concurrent.futures import ThreadPoolExecutor
-
         if max_concurrency is None:
             max_concurrency = getattr(self.fetcher, "max_concurrency", 4)
         t0 = time.perf_counter()
@@ -273,7 +319,7 @@ class Pipeline:
             },
         }
 
-    # -- dataops target: corpus curation -> training shards ----------------
+    # -- dataops targets: NL query -> table entry -> handler -> sink ------
     def run_dataops(self, query: str, source_dir: str,
                     output_path: str) -> dict:
         """Plan-level training-data target: NL query -> typed dataops
@@ -285,21 +331,17 @@ class Pipeline:
         The finance lifecycle (``run``) and this target share the
         publish/report conventions; the composition itself is the
         engine's unchanged scale path — the orchestrator only binds
-        NL-derived parameters and the sink."""
-        from dynamic_etl_pipeline_thesis_ii_spark.queries.dataops_suite import (
-            corpus_to_shards_frame,
-            release_shared_caches,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            write_shards,
-        )
+        NL-derived parameters and the sink.
 
+        Every target routes through :data:`DATAOPS_TARGETS`: this
+        runner checks the entry's required plan key, calls its
+        handler, and alone builds the rejected/complete result and
+        emits the ``publish`` event."""
         # dry-run face: 'explain: <query>' returns the typed plan the
         # engine WOULD execute — no Spark job, no sink write. The
         # reference exposes plan validation as a first-class stage;
         # this is its ask-before-you-run face.
-        if m := re.match(r"^\s*explain\s*[:,]?\s+(.*)$", query,
-                         re.IGNORECASE | re.DOTALL):
+        if m := EXPLAIN_RE.match(query):
             inner = parse_dataops_query(m.group(1))
             self.progress("plan", {"proceed": False,
                                    "explain": True,
@@ -307,143 +349,43 @@ class Pipeline:
             if inner is None:
                 return {"status": "explained", "outputs": [],
                         "reports": {"plan": None,
-                                    "note": "not a dataops query — "
-                                            "would be rejected"}}
+                                    "note": "not a dataops query"}}
             return {"status": "explained", "outputs": [],
                     "reports": {"plan": inner}}
         plan = parse_dataops_query(query)
         self.progress("plan", {"proceed": plan is not None,
                                "target": plan["target"] if plan else None})
-        if plan is None:
-            return {"status": "rejected", "reason": "not a dataops query",
-                    "outputs": [], "reports": {}}
-        if plan["target"] == "ingest_crawl":
-            return self._run_ingest_crawl(plan, output_path)
-        if plan["target"] == "ingest_pdfs":
-            return self._run_ingest_pdfs(plan, output_path)
-        if plan["target"] == "ingest_archives":
-            return self._run_ingest_archives(plan, output_path)
-        if plan["target"] == "corpus_diff":
-            return self._run_corpus_diff(plan, source_dir, output_path)
-        if plan["target"] in ("image_dedup", "audio_dedup",
-                              "video_dedup"):
-            return self._run_media_dedup(plan, source_dir, output_path)
-        if plan["target"] in ("image_probe", "audio_probe",
-                              "video_probe"):
-            return self._run_media_probe(plan, source_dir, output_path)
-        if plan["target"] in ("video_containment", "audio_containment"):
-            return self._run_containment(plan, source_dir, output_path)
-        if plan["target"] == "containment_probe":
-            return self._run_containment_probe(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "neardup_probe":
-            return self._run_neardup_probe(plan, source_dir, output_path)
-        if plan["target"] == "band_snapshot":
-            return self._run_band_snapshot(plan, source_dir, output_path)
-        if plan["target"] == "incremental_dedup":
-            return self._run_incremental_dedup(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "substring_dedup":
-            return self._run_substring_dedup(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "passage_snapshot":
-            return self._run_passage_snapshot(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "passage_probe":
-            return self._run_passage_probe(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "domain_rank":
-            return self._run_domain_rank(plan, output_path)
-        if plan["target"] == "link_graph_build":
-            return self._run_link_graph_build(plan, output_path)
-        if plan["target"] == "compact_store":
-            return self._run_compact_store(plan, output_path)
-        if plan["target"] == "license_scan":
-            return self._run_license_scan(plan, source_dir,
-                                          output_path)
-        if plan["target"] == "bin_pack":
-            return self._run_bin_pack(plan, source_dir, output_path)
-        if plan["target"] == "embed_documents":
-            return self._run_embed_documents(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "chunk_documents":
-            return self._run_chunk_documents(plan, source_dir, output_path)
-        if plan["target"] == "corpus_census":
-            return self._run_corpus_census(plan, source_dir, output_path)
-        if plan["target"] == "tokenize_pack":
-            return self._run_tokenize_pack(plan, source_dir, output_path)
-        if plan["target"] == "tokenizer_train":
-            return self._run_tokenizer_train(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "tokenizer_stats":
-            return self._run_tokenizer_stats(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "classifier_train":
-            return self._run_classifier_train(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "classifier_score":
-            return self._run_classifier_score(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "semantic_dedup":
-            return self._run_semantic_dedup(plan, source_dir, output_path)
-        if plan["target"] == "cluster_corpus":
-            return self._run_cluster_corpus(plan, source_dir, output_path)
-        if plan["target"] == "cluster_assign":
-            return self._run_cluster_assign(plan, source_dir, output_path)
-        if plan["target"] == "verify_shards":
-            return self._run_verify_shards(plan, output_path)
-        if plan["target"] == "data_card":
-            return self._run_data_card(plan, source_dir, output_path)
-        if plan["target"] == "decontaminate":
-            return self._run_decontaminate(plan, source_dir, output_path)
-        if plan["target"] == "decontaminate_spans":
-            return self._run_decontaminate_spans(plan, source_dir,
-                                                 output_path)
-        if plan["target"] == "retrieve":
-            return self._run_retrieve(plan, source_dir, output_path)
-        if plan["target"] == "hybrid_search":
-            return self._run_hybrid_search(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "bm25_index_build":
-            return self._run_bm25_index_build(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "bm25_index_append":
-            return self._run_bm25_index_append(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "corpus_store_build":
-            return self._run_corpus_store_build(plan, source_dir,
-                                                output_path)
-        if plan["target"] == "webdataset_write":
-            return self._run_webdataset_write(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "corpus_rebucket":
-            return self._run_corpus_rebucket(plan, output_path)
-        if plan["target"] == "corpus_upsert":
-            return self._run_corpus_upsert(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "ann_search":
-            return self._run_ann_search(plan, source_dir, output_path)
-        if plan["target"] == "ann_index_build":
-            return self._run_ann_index_build(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "ann_index_append":
-            return self._run_ann_index_append(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "ann_recall":
-            return self._run_ann_recall(plan, source_dir, output_path)
-        if plan["target"] == "ann_tune":
-            return self._run_ann_tune(plan, source_dir, output_path)
-        if plan["target"] == "split_corpus":
-            return self._run_split_corpus(plan, source_dir, output_path)
-        if plan["target"] == "dsir_select":
-            return self._run_dsir_select(plan, source_dir, output_path)
-        if plan["target"] == "temperature_mix":
-            return self._run_temperature_mix(plan, source_dir, output_path)
-        if plan["target"] == "unimax_mix":
-            return self._run_unimax_mix(plan, source_dir, output_path)
-        if plan["target"] == "shuffle_order":
-            return self._run_shuffle_order(plan, source_dir, output_path)
+        try:
+            if plan is None:
+                raise Rejected("not a dataops query")
+            target = DATAOPS_TARGETS[plan["target"]]
+            if target.requires and not plan.get(target.requires):
+                raise Rejected(target.reason.format_map(plan))
+            outputs, report, rows = target.handler(self, plan, source_dir,
+                                                   output_path)
+        except Rejected as exc:
+            return {"status": "rejected", "reason": str(exc),
+                    "outputs": [],
+                    "reports": {} if plan is None else {"plan": dict(plan)}}
+        self.progress("publish", rows if isinstance(rows, dict)
+                      else {"rows": rows, "path": output_path})
+        return {"status": "complete", "outputs": outputs,
+                "reports": {"plan": dict(plan), **report}}
 
+    def _publish(self, frame: DataFrame, path: str,
+                 read_back: bool = True) -> Optional[DataFrame]:
+        """Overwrite-write ``frame`` at ``path`` and return the lazy
+        read-back of what landed, so reports count the written rows.
+        No action beyond the write; ``read_back=False`` also skips the
+        read's schema pass for sinks nothing reads."""
+        frame.write.mode("overwrite").parquet(path)
+        return self.spark.read.parquet(path) if read_back else None
+
+    def _run_corpus_to_shards(self, plan: dict, source_dir: str,
+                              output_path: str) -> Handled:
+        """The default target: the ``corpus_to_shards`` composition
+        written through ``write_shards`` with placement verification
+        (and the per-shard manifest when asked)."""
         if plan["n_buckets"] is None:
             # corpus-derived bucket count (one cheap count): the
             # packing shuffle's task count IS n_buckets, so it must
@@ -452,13 +394,10 @@ class Pipeline:
             # derived value lands in plan/report — bucket count is
             # part of the output's deterministic identity (stream
             # membership hashes id % n_buckets).
-            from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-                Catalog,
-            )
             n_docs = Catalog(self.spark, source_dir).documents.count()
             plan["n_buckets"] = derive_n_buckets(
                 n_docs, floor=max(4, plan["n_shards"]))
-        frame = corpus_to_shards_frame(
+        frame = dataops_suite.corpus_to_shards_frame(
             self.spark, source_dir,
             token_budget=plan["token_budget"], seq_len=plan["seq_len"],
             n_shards=plan["n_shards"], n_buckets=plan["n_buckets"],
@@ -467,23 +406,17 @@ class Pipeline:
         try:
             # the frame's persisted `shard` column IS the writer's hash;
             # drop it and let write_shards recompute + verify placement
-            sink_report = write_shards(
+            sink_report = sinks.write_shards(
                 frame.drop("shard"), output_path,
                 n_shards=plan["n_shards"], key_col="id",
                 shuffle_salt=plan.get("shuffle_salt"), verify=True,
                 manifest=plan.get("manifest", False))
         finally:
-            release_shared_caches()
-        self.progress("publish", {"rows": sink_report.get("rows_written"),
-                                  "path": output_path})
-        return {
-            "status": "complete",
-            "outputs": [frame],
-            "reports": {"plan": dict(plan), "sink": sink_report},
-        }
+            dataops_suite.release_shared_caches()
+        return [frame], {"sink": sink_report}, sink_report.get("rows_written")
 
     def _run_incremental_dedup(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+                               output_path: str) -> Handled:
         """'dedup the batch against the seen snapshot at <path>': the
         continuous-ingest step — source_dir's documents are the new
         batch, the snapshot parquet holds the (id, key) content keys
@@ -502,67 +435,45 @@ class Pipeline:
         ``<output>_snapshot_bloom`` next to the grown snapshot — a
         refit (2x-capacity resize) happens only when accumulated
         inserts exceed the capacity the filter was sized for."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            BloomFilter,
-            bloom_snapshot_fresh,
-            content_keys,
-            incremental_exact,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from pyspark.sql import Window as _W
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "incremental dedup needs a snapshot path "
-                              "('... against the seen snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         seen = self.spark.read.parquet(plan["snapshot_path"])
         batch = Catalog(self.spark, source_dir).documents
         bloom, bloom_loaded = None, False
         if plan.get("bloom"):
             try:
-                bloom = BloomFilter.load(
+                bloom = D.BloomFilter.load(
                     self.spark, plan["snapshot_path"] + "_bloom")
                 bloom_loaded = True
             except Exception:
                 pass    # no stored filter yet: first epoch fits one
             if bloom is None:
                 n_seen = seen.select("key").distinct().count()
-                bloom = BloomFilter.fit(seen.select("key"), "key",
-                                        fpp=0.01, n_items=n_seen,
-                                        capacity=2 * n_seen)
-            fresh = bloom_snapshot_fresh(batch, seen, bloom=bloom)
-            keep = F.min("doc_id").over(_W.partitionBy("__k"))
+                bloom = D.BloomFilter.fit(seen.select("key"), "key",
+                                          fpp=0.01, n_items=n_seen,
+                                          capacity=2 * n_seen)
+            fresh = D.bloom_snapshot_fresh(batch, seen, bloom=bloom)
+            keep = F.min("doc_id").over(Window.partitionBy("__k"))
             fresh = (fresh.withColumn("__keep", keep)
                      .filter(F.col("doc_id") == F.col("__keep"))
                      .drop("__k", "__keep"))
         else:
-            fresh = incremental_exact(batch, seen)
+            fresh = D.incremental_exact(batch, seen)
         self.progress("dedup", {"params": dict(plan),
                                 "bloom_loaded": bloom_loaded})
-        fresh.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(fresh, output_path)
         n_fresh = back.count()
         grown = seen.select("id", "key").unionByName(
-            content_keys(back)).distinct()
+            D.content_keys(back)).distinct()
         grown.write.mode("overwrite").parquet(output_path + "_snapshot")
         # running corpus census rides the snapshot store too: fold the
         # FRESH rows' census into the loaded one at batch cost — the
         # result equals a full recompute over everything ever
         # ingested, without re-scanning the corpus (text.corpus_census
         # contract; disjointness is exactly what the dedup guarantees)
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            corpus_census,
-            merge_census,
-        )
-        fresh_census = corpus_census(back)
+        fresh_census = T.corpus_census(back)
         try:
             prior = self.spark.read.parquet(
                 plan["snapshot_path"] + "_census")
-            census = merge_census(prior, fresh_census)
+            census = T.merge_census(prior, fresh_census)
         except Exception:       # bootstrap epoch: no census yet
             census = fresh_census
         census.write.mode("overwrite").parquet(
@@ -576,28 +487,24 @@ class Pipeline:
                 grown_keys = self.spark.read.parquet(
                     output_path + "_snapshot")
                 n_grown = grown_keys.select("key").distinct().count()
-                bloom = BloomFilter.fit(grown_keys.select("key"), "key",
-                                        fpp=bloom.fpp, n_items=n_grown,
-                                        capacity=2 * n_grown)
+                bloom = D.BloomFilter.fit(grown_keys.select("key"), "key",
+                                          fpp=bloom.fpp, n_items=n_grown,
+                                          capacity=2 * n_grown)
                 bloom_refit = True
             else:
-                bloom.add_keys(content_keys(back).select("key"),
+                bloom.add_keys(D.content_keys(back).select("key"),
                                n_new=n_fresh)
             bloom.save(self.spark, output_path + "_snapshot_bloom")
-        self.progress("publish", {"rows": n_fresh, "path": output_path})
-        return {"status": "complete", "outputs": [fresh],
-                "reports": {"plan": dict(plan),
-                            "batch_rows": batch.count(),
-                            "fresh_rows": n_fresh,
-                            "bloom_loaded": bloom_loaded,
-                            "bloom_refit": bloom_refit,
-                            "snapshot_path_out":
-                                output_path + "_snapshot",
-                            "census_path_out":
-                                output_path + "_snapshot_census"}}
+        return [fresh], {"batch_rows": batch.count(),
+                         "fresh_rows": n_fresh,
+                         "bloom_loaded": bloom_loaded,
+                         "bloom_refit": bloom_refit,
+                         "snapshot_path_out": output_path + "_snapshot",
+                         "census_path_out":
+                             output_path + "_snapshot_census"}, n_fresh
 
     def _run_passage_snapshot(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'build a passage snapshot of the corpus (windows of 50
         tokens)': persist the documents table's distinct window
         hashes (:func:`operators.dedup.save_window_snapshot` —
@@ -605,29 +512,14 @@ class Pipeline:
         face of the passage_probe target, completing the
         build/probe/grow lifecycle for ExactSubstr exactly as the
         band snapshot does for MinHash."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            save_window_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        n_in = docs.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        report = save_window_snapshot(docs, output_path,
-                                      w=plan["window"])
-        self.progress("publish", {"rows": report["n_windows"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), "docs_in": n_in,
-                            **report}}
+        n_in = _rows(docs, "documents")
+        report = D.save_window_snapshot(docs, output_path,
+                                        w=plan["window"])
+        return [], {"docs_in": n_in, **report}, report["n_windows"]
 
     def _run_passage_probe(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'flag duplicated passages against the passage snapshot at
         /path': continuous-ingest ExactSubstr — which passages of
         the batch already exist in the seen corpus
@@ -638,50 +530,46 @@ class Pipeline:
         epoch-grow step. The probe tokenizes with the SNAPSHOT's own
         window size from the geometry sidecar. Rejects a missing or
         unreadable snapshot path with an actionable reason."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            incremental_substring_spans,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "passage probe needs a snapshot path "
-                              "('against the passage snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         snap = plan["snapshot_path"].rstrip("/")
-        try:
+        with _rejecting(f"no passage snapshot readable at "
+                        f"{plan['snapshot_path']}"):
             self.spark.read.parquet(snap + "_meta").first()["w"]
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no passage snapshot readable at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         batch = Catalog(self.spark, source_dir).documents
-        spans, fresh = incremental_substring_spans(
+        spans, fresh = D.incremental_substring_spans(
             batch, self.spark, snap)
-        spans.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        n_spans = back.count()
-        n_docs = back.select("id").distinct().count()
-        n_fresh = fresh.count()
+        outputs, report, n_spans = self._publish_spans(spans, output_path)
+        report["fresh_windows"] = fresh.count()
         if plan.get("update"):
             fresh.write.mode("append").parquet(snap)
-        self.progress("publish", {"rows": n_spans,
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [spans],
-                "reports": {"plan": dict(plan),
-                            "spans_flagged": n_spans,
-                            "docs_affected": n_docs,
-                            "fresh_windows": n_fresh,
-                            "snapshot_updated":
-                                bool(plan.get("update"))}}
+        report["snapshot_updated"] = bool(plan.get("update"))
+        return outputs, report, n_spans
+
+    def _publish_spans(self, spans: DataFrame,
+                       output_path: str) -> Handled:
+        """Publish a flagged-span table; report spans and documents."""
+        back = self._publish(spans, output_path)
+        n_spans = back.count()
+        n_docs = back.select("id").distinct().count()
+        return [spans], {"spans_flagged": n_spans,
+                         "docs_affected": n_docs}, n_spans
+
+    def _publish_cut(self, cleaned: DataFrame,
+                     output_path: str) -> Handled:
+        """Publish a span-cut corpus (id, text, n_removed); report the
+        documents kept, the documents touched and the tokens cut."""
+        back = self._publish(cleaned, output_path)
+        agg = back.agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
+            .alias("affected"),
+            F.sum("n_removed").alias("removed")).first()
+        return [cleaned], {"docs_out": agg["docs"],
+                           "docs_affected": int(agg["affected"] or 0),
+                           "tokens_removed": int(agg["removed"] or 0)}, \
+            agg["docs"]
 
     def _run_embed_documents(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'embed the documents, 128 dimensions': deterministic
         hashed random-projection embeddings
         (:func:`operators.similarity.hash_embed`) written
@@ -690,32 +578,21 @@ class Pipeline:
         index build/search, semantic dedup, clustering, hybrid
         search) chains off the output dir with no external encoder.
         The report carries the dim and a norm sanity check."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            hash_embed,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        emb = (hash_embed(docs, dim=plan["dim"])
+        emb = (S.hash_embed(docs, dim=plan["dim"])
                .select(F.col("id").alias("vec_id"), "embedding"))
         self.progress("embed", {"params": dict(plan)})
-        emb.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(emb, output_path)
         n = back.count()
         norms = back.select(F.aggregate(
             F.col("embedding").cast("array<double>"), F.lit(0.0),
             lambda a, x: a + x * x).alias("sq")) \
             .agg(F.round(F.avg("sq"), 4).alias("mean_sq")).first()
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [emb],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "dim": plan["dim"],
-                            "mean_sq_norm": norms["mean_sq"]}}
+        return [emb], {"n_vectors": n, "dim": plan["dim"],
+                       "mean_sq_norm": norms["mean_sq"]}, n
 
     def _run_bin_pack(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+                      output_path: str) -> Handled:
         """'bin pack the corpus into bins of 1024 tokens without
         truncation': truncation-free FFD packing
         (:func:`operators.packing.bin_pack_documents` — every doc
@@ -724,39 +601,25 @@ class Pipeline:
         carries the per-bucket efficiency stats (bins vs the
         oversize-aware lower bound, waste fraction) — the number the
         FFD trade is judged by."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.packing import (
-            bin_pack_documents,
-            bin_pack_stats,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         n_docs = docs.count()
         nb = plan["n_buckets"] or derive_n_buckets(n_docs)
-        packed = bin_pack_documents(docs, budget=plan["budget"],
-                                    n_buckets=nb)
+        packed = PK.bin_pack_documents(docs, budget=plan["budget"],
+                                       n_buckets=nb)
         self.progress("bin_pack", {"params": dict(plan),
                                    "n_buckets": nb})
-        packed.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(packed, output_path)
         stats = [r.asDict() for r in
-                 bin_pack_stats(back, plan["budget"])
+                 PK.bin_pack_stats(back, plan["budget"])
                  .orderBy("bucket").collect()]
-        total_bins = sum(s["bins_used"] for s in stats)
-        self.progress("publish", {"rows": back.count(),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [packed],
-                "reports": {"plan": dict(plan), "n_docs": n_docs,
-                            "n_buckets": nb,
-                            "total_bins": total_bins,
-                            "oversize_docs": sum(
-                                s["oversize_docs"] for s in stats),
-                            "bucket_stats": stats}}
+        return [packed], {"n_docs": n_docs, "n_buckets": nb,
+                          "total_bins": sum(s["bins_used"] for s in stats),
+                          "oversize_docs": sum(
+                              s["oversize_docs"] for s in stats),
+                          "bucket_stats": stats}, back.count()
 
     def _run_license_scan(self, plan: dict, source_dir: str,
-                          output_path: str) -> dict:
+                          output_path: str) -> Handled:
         """'license audit the corpus' / 'scan the corpus for
         licenses, dropping copyleft and restricted documents':
         corpus-governance scan (:func:`operators.text.license_scan`
@@ -765,41 +628,24 @@ class Pipeline:
         the sink; with one, the KEPT documents land instead and the
         flag pass rides the same scan. Per-class counts inline in
         the report either way."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_class,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_scan,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        flags = license_scan(docs)
+        flags = T.license_scan(docs)
         counts = {r["license_class"]: r["n"]
                   for r in flags.groupBy("license_class")
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
         if plan["drop"]:
-            kept = docs.filter(
-                ~license_class(F.col("text")).isin(plan["drop"]))
-            out_frame = kept
+            out_frame = docs.filter(
+                ~T.license_class(F.col("text")).isin(plan["drop"]))
         else:
             out_frame = flags
         self.progress("license_scan", {"params": dict(plan),
                                        "class_counts": counts})
-        out_frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out,
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [out_frame],
-                "reports": {"plan": dict(plan),
-                            "class_counts": counts,
-                            "rows_out": n_out,
-                            "dropped_classes": plan["drop"]}}
+        n_out = self._publish(out_frame, output_path).count()
+        return [out_frame], {"class_counts": counts, "rows_out": n_out,
+                             "dropped_classes": plan["drop"]}, n_out
 
-    def _run_compact_store(self, plan: dict,
-                           output_path: str) -> dict:
+    def _run_compact_store(self, plan: dict, source_dir: str,
+                           output_path: str) -> Handled:
         """'compact the snapshot at /path': rewrite an append-grown
         store (band/passage/hamming/key snapshots — N epochs of
         parquet appends = N small file batches, the classic
@@ -810,24 +656,8 @@ class Pipeline:
         passage stores, (band, id) for MinHash band tables, (key)
         for content-key snapshots, else every column. The report
         carries files before/after and the deduped row count."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            compact_snapshot,
-        )
-
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "compaction needs a store path "
-                              "('compact the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            cols = self.spark.read.parquet(
-                plan["store_path"]).columns
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no store readable at "
-                              f"{plan['store_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
+        with _rejecting(f"no store readable at {plan['store_path']}"):
+            cols = self.spark.read.parquet(plan["store_path"]).columns
         if {"band", "key"} <= set(cols):
             key_cols = ["band", "key"]
         elif "whash" in cols:
@@ -838,16 +668,12 @@ class Pipeline:
             key_cols = ["key"]
         else:
             key_cols = list(cols)
-        report = compact_snapshot(self.spark, plan["store_path"],
-                                  output_path, key_cols)
-        self.progress("publish", {"rows": report["rows"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan),
-                            "key_cols": key_cols, **report}}
+        report = sinks.compact_snapshot(self.spark, plan["store_path"],
+                                        output_path, key_cols)
+        return [], {"key_cols": key_cols, **report}, report["rows"]
 
-    def _run_link_graph_build(self, plan: dict,
-                              output_path: str) -> dict:
+    def _run_link_graph_build(self, plan: dict, source_dir: str,
+                              output_path: str) -> Handled:
         """'build the link graph from the crawl at /path': WARC
         responses -> href extraction -> distinct (src, dst)
         registered-domain edges at the sink
@@ -856,27 +682,9 @@ class Pipeline:
         crawl -> graph -> rank -> weight pipeline; point a follow-up
         'rank the domains by the link graph at <output>' at the
         result. Rejects a missing/unreadable crawl path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            page_link_edges,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.warc import (
-            read_warc,
-        )
-
-        if not plan.get("crawl_path"):
-            return {"status": "rejected",
-                    "reason": "link-graph build needs a crawl path "
-                              "('from the crawl at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            recs = read_warc(self.spark, plan["crawl_path"])
+        with _rejecting(f"no crawl readable at {plan['crawl_path']}"):
+            recs = warc.read_warc(self.spark, plan["crawl_path"])
             recs.schema     # force the source to resolve
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no crawl readable at "
-                              f"{plan['crawl_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         pages = (recs.filter((F.col("warc_type") == "response")
                              & (F.col("http_status") == 200)
                              & F.col("http_content_type")
@@ -885,24 +693,19 @@ class Pipeline:
                  .select(F.col("target_uri").alias("url"),
                          F.col("text").alias("html")))
         n_pages = pages.count()
-        edges = page_link_edges(pages)
+        edges = WB.page_link_edges(pages)
         self.progress("link_graph", {"params": dict(plan),
                                      "pages": n_pages})
-        edges.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(edges, output_path)
         n_edges = back.count()
         n_domains = (back.select(F.col("src").alias("d"))
                      .unionByName(back.select(F.col("dst").alias("d")))
                      .distinct().count())
-        self.progress("publish", {"rows": n_edges,
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [edges],
-                "reports": {"plan": dict(plan), "n_pages": n_pages,
-                            "n_edges": n_edges,
-                            "n_domains": n_domains}}
+        return [edges], {"n_pages": n_pages, "n_edges": n_edges,
+                         "n_domains": n_domains}, n_edges
 
-    def _run_domain_rank(self, plan: dict,
-                         output_path: str) -> dict:
+    def _run_domain_rank(self, plan: dict, source_dir: str,
+                         output_path: str) -> Handled:
         """'rank the domains by the link graph at /path, 10
         iterations': PageRank over a persisted (src, dst) domain
         edge table (:func:`operators.web.domain_pagerank`) — the
@@ -912,41 +715,23 @@ class Pipeline:
         report inlines the top-10 domains. Rejects a missing path or
         a parquet without (src, dst) columns with an actionable
         reason."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            domain_harmonic,
-            domain_pagerank,
-        )
-
-        if not plan.get("edges_path"):
-            return {"status": "rejected",
-                    "reason": "domain ranking needs a link graph "
-                              "path ('by the link graph at /path' — "
-                              "a parquet of (src, dst) domain "
-                              "edges)",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejecting(f"no link graph readable at "
+                        f"{plan['edges_path']}"):
             edges = self.spark.read.parquet(plan["edges_path"])
             if not {"src", "dst"} <= set(edges.columns):
                 raise ValueError(
                     f"expected (src, dst) columns, found "
                     f"{edges.columns}")
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no link graph readable at "
-                              f"{plan['edges_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         if plan.get("method") == "harmonic":
-            ranks = domain_harmonic(edges.select("src", "dst"),
-                                    max_radius=plan["n_iter"])
+            ranks = WB.domain_harmonic(edges.select("src", "dst"),
+                                       max_radius=plan["n_iter"])
             score = "harmonic"
         else:
-            ranks = domain_pagerank(edges.select("src", "dst"),
-                                    n_iter=plan["n_iter"])
+            ranks = WB.domain_pagerank(edges.select("src", "dst"),
+                                       n_iter=plan["n_iter"])
             score = "rank"
         self.progress("domain_rank", {"params": dict(plan)})
-        ranks.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(ranks, output_path)
         n = back.count()
         # mirrored report shape across both methods — (domain, score,
         # in_degree) — so users can compare the two rankings from one
@@ -968,14 +753,12 @@ class Pipeline:
             top = [{"domain": r["domain"], "score": r[score],
                     "in_degree": r["in_degree"]}
                    for r in top_rows]
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [ranks],
-                "reports": {"plan": dict(plan), "n_domains": n,
-                            "method": plan.get("method", "pagerank"),
-                            "top_domains": top}}
+        return [ranks], {"n_domains": n,
+                         "method": plan.get("method", "pagerank"),
+                         "top_domains": top}, n
 
     def _run_substring_dedup(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'remove duplicated passages across the corpus (windows of
         50 tokens)': cross-document ExactSubstr dedup (D18 —
         :func:`operators.dedup.exact_substring_dedup`): every token
@@ -985,52 +768,19 @@ class Pipeline:
         counts flagged spans, affected documents and removed tokens.
         'flag' / 'find' phrasings report the span table itself
         without rewriting the corpus."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            exact_substring_dedup,
-            substring_duplicate_spans,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         w = plan["window"]
-        spans = substring_duplicate_spans(docs, w=w)
+        spans = D.substring_duplicate_spans(docs, w=w)
         if plan.get("flag_only"):
-            spans.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
-            n_spans = back.count()
-            n_docs = back.select("id").distinct().count()
-            self.progress("publish", {"rows": n_spans,
-                                      "path": output_path})
-            return {"status": "complete", "outputs": [spans],
-                    "reports": {"plan": dict(plan),
-                                "spans_flagged": n_spans,
-                                "docs_affected": n_docs}}
-        cleaned = exact_substring_dedup(docs, w=w)
+            return self._publish_spans(spans, output_path)
+        cleaned = D.exact_substring_dedup(docs, w=w)
         self.progress("substring_dedup", {"params": dict(plan)})
-        cleaned.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        agg = back.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
-            .alias("affected"),
-            F.sum("n_removed").alias("removed")).first()
-        self.progress("publish", {"rows": agg["docs"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [cleaned],
-                "reports": {"plan": dict(plan),
-                            "docs_out": agg["docs"],
-                            "docs_affected": int(agg["affected"] or 0),
-                            "tokens_removed": int(agg["removed"] or 0)}}
+        return self._publish_cut(cleaned, output_path)
 
     def _media_or_none(self, source_dir: str):
         """The source dir's optional ``media`` table, or None when the
-        dir carries no readable media parquet — callers turn None into
-        the actionable-rejection contract."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
+        dir carries no readable media parquet — :meth:`_media` turns
+        None into the actionable-rejection contract."""
         try:
             media = Catalog(self.spark, source_dir).media
             media.schema      # force the read to resolve
@@ -1038,8 +788,16 @@ class Pipeline:
         except Exception:
             return None
 
+    def _media(self, source_dir: str) -> DataFrame:
+        """The source dir's ``media`` table; a missing one rejects."""
+        media = self._media_or_none(source_dir)
+        if media is None:
+            raise Rejected(f"no media table readable at "
+                           f"{source_dir}/media.parquet")
+        return media
+
     def _run_media_dedup(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+                         output_path: str) -> Handled:
         """'dedup the images' / 'dedup the audio clips': perceptual
         near-dup dedup over the source dir's ``media`` table — dHash
         (images) or aHash (audio) fingerprints (one Arrow payload
@@ -1054,35 +812,14 @@ class Pipeline:
         at batch cost via the probe target. Hot-bucket cap telemetry
         (``dedup.bucket_cap_stats``) rides the report — the engine's
         no-silent-caps discipline on its hottest knob."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            dedup_by_components,
-            hamming_band_keys,
-            hamming_band_pairs,
-            save_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            audio_ahash,
-            image_dhash,
-            video_vhash,
-        )
-
         modality = plan.get("modality", "image")
-        fingerprint = {"image": image_dhash, "audio": audio_ahash,
-                       "video": video_vhash}[modality]
+        fingerprint = {"image": M.image_dhash, "audio": M.audio_ahash,
+                       "video": M.video_vhash}[modality]
         dec_key = {"image": "images_decodable",
                    "audio": "clips_decodable",
                    "video": "videos_decodable"}[modality]
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_in = media.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "media table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(source_dir)
+        n_in = _rows(media, "media")
         mh, nb = plan["max_hamming"], plan["n_blocks"]
         # fingerprint ONCE (the payload decode dominates this target's
         # cost) and share the frame between the pair join, the kept-row
@@ -1090,36 +827,31 @@ class Pipeline:
         fps = fingerprint(media).persist()
         n_decodable = fps.count()
         cap: dict = {}
-        pairs = hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
-                                   cap_report=cap,
-                                   hot_policy=plan.get("hot_policy",
-                                                       "drop"))
-        kept = dedup_by_components(media, pairs, id_col="media_id")
+        pairs = D.hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
+                                     cap_report=cap,
+                                     hot_policy=plan.get("hot_policy",
+                                                         "drop"))
+        kept = D.dedup_by_components(media, pairs, id_col="media_id")
         self.progress("media_dedup", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "cap": cap})
-        kept.write.mode("overwrite").parquet(output_path)
-        n_kept = self.spark.read.parquet(output_path).count()  # read-back
+        n_kept = self._publish(kept, output_path).count()  # read-back
         snap = output_path + "_snapshot"
         # represent mode: over-cap buckets keep their min-id member so
         # the PERSISTED snapshot stays probe-able under duplicate
         # floods (a later flood copy flags against the representative
         # instead of silently missing) while staying |corpus|-bounded
-        save_hamming_snapshot(
-            hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
-                              cap_mode="represent"),
+        D.save_hamming_snapshot(
+            D.hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
+                                cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
         fps.unpersist()
-        self.progress("publish", {"rows": n_kept, "path": output_path})
-        return {"status": "complete", "outputs": [kept],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            dec_key: n_decodable,
-                            "rows_kept": n_kept,
-                            "cap_telemetry": cap,
-                            "snapshot_path_out": snap}}
+        return [kept], {"rows_in": n_in, dec_key: n_decodable,
+                        "rows_kept": n_kept, "cap_telemetry": cap,
+                        "snapshot_path_out": snap}, n_kept
 
     def _run_media_probe(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+                         output_path: str) -> Handled:
         """'flag the new images|audio against the snapshot at /path':
         the batch half of the media lifecycle — fingerprint the source
         dir's media table and probe the persisted hamming snapshot
@@ -1133,56 +865,31 @@ class Pipeline:
         additionally APPENDS the batch's fresh fingerprints to the
         store (epoch grow at batch cost — the image twin of the
         Bloom add_keys / ANN-index append steps)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            incremental_hamming_pairs,
-            load_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            audio_ahash,
-            image_dhash,
-            video_vhash,
-        )
-
         modality = plan.get("modality", "image")
-        fingerprint = {"image": image_dhash, "audio": audio_ahash,
-                       "video": video_vhash}[modality]
+        fingerprint = {"image": M.image_dhash, "audio": M.audio_ahash,
+                       "video": M.video_vhash}[modality]
         noun = {"image": "images", "audio": "clips",
                 "video": "videos"}[modality]
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": f"{modality} probe needs a snapshot path "
-                              "('... against the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            banded, geom = load_hamming_snapshot(
+        with _rejecting(f"no loadable hamming snapshot at "
+                        f"{plan['snapshot_path']}"):
+            banded, geom = D.load_hamming_snapshot(
                 self.spark, plan["snapshot_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable hamming snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(source_dir)
         n_in = media.count()
         fps = fingerprint(media).persist()
         n_decodable = fps.count()
-        pairs = incremental_hamming_pairs(fps, banded, **geom)
+        pairs = D.incremental_hamming_pairs(fps, banded, **geom)
         self.progress("media_probe", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "geometry": geom})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)       # read-back
+        back = self._publish(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
-                   f"{noun}_decodable": n_decodable,
-                   "flag_pairs": n_pairs,
-                   f"{noun}_flagged": n_flagged,
-                   "geometry": geom}
+        report = {"batch_rows": n_in,
+                  f"{noun}_decodable": n_decodable,
+                  "flag_pairs": n_pairs,
+                  f"{noun}_flagged": n_flagged,
+                  "geometry": geom}
         if plan.get("update"):
             # epoch grow: append the batch's FRESH fingerprints (not
             # flagged against the store, then within-batch-deduped so
@@ -1191,19 +898,14 @@ class Pipeline:
             # commit protocol — a failed job leaves the store intact —
             # and the new files get the same range-partitioned/sorted
             # layout so footer-stat pruning covers them too.
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-                hamming_band_keys,
-                hamming_band_pairs,
-                min_label_components,
-            )
             n_before = banded.count()
             fresh = fps.join(back.select(F.col("id_new").alias("id"))
                              .distinct(), "id", "left_anti")
-            drop = (min_label_components(
-                        hamming_band_pairs(fresh, **geom))
+            drop = (D.min_label_components(
+                        D.hamming_band_pairs(fresh, **geom))
                     .filter(F.col("id") != F.col("comp")).select("id"))
             keep = fresh.join(drop, "id", "left_anti")
-            new_banded = hamming_band_keys(keep, **geom)
+            new_banded = D.hamming_band_keys(keep, **geom)
             (new_banded.repartitionByRange("band", "key")
              .sortWithinPartitions("band", "key")
              .write.mode("append").parquet(plan["snapshot_path"]))
@@ -1213,16 +915,14 @@ class Pipeline:
             self.progress("grow_snapshot",
                           {"appended": n_appended,
                            "rows_after": n_after})
-            reports.update({"snapshot_rows_before": n_before,
-                            "snapshot_rows_after": n_after,
-                            f"{noun}_appended": n_appended})
+            report.update({"snapshot_rows_before": n_before,
+                           "snapshot_rows_after": n_after,
+                           f"{noun}_appended": n_appended})
         fps.unpersist()
-        self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+        return [pairs], report, n_pairs
 
     def _run_containment(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+                         output_path: str) -> Handled:
         """'find videos containing clips of each other' / 'audio
         containment': sub-clip matching over the media table —
         per-frame dHash rows (video) or onset-anchored window aHashes
@@ -1234,32 +934,13 @@ class Pipeline:
         later batches probe for CONTAINED known content at batch cost
         via the containment_probe target. Cap telemetry rides the
         report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hamming_band_keys,
-            save_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            _containment_rollup,
-            audio_window_hashes,
-            video_frame_hashes,
-        )
-
         modality = plan.get("modality", "video")
-        hashes_fn = (video_frame_hashes if modality == "video"
-                     else audio_window_hashes)
+        hashes_fn = (M.video_frame_hashes if modality == "video"
+                     else M.audio_window_hashes)
         shared_col = ("shared_frames" if modality == "video"
                       else "shared_windows")
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_in = media.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "media table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(source_dir)
+        n_in = _rows(media, "media")
         mh, nb = plan["max_hamming"], plan["n_blocks"]
         # hash ONCE (the payload decode dominates) and share the frame
         # between the pair rollup and the persisted snapshot
@@ -1269,34 +950,31 @@ class Pipeline:
         n_rows = fh.count()
         n_decodable = fh.select("id").distinct().count()
         cap: dict = {}
-        pairs = _containment_rollup(
+        pairs = M._containment_rollup(
             fh, plan["min_shared"], shared_col, max_hamming=mh,
             n_blocks=nb, cap_report=cap,
             hot_policy=plan.get("hot_policy", "drop"))
         self.progress("containment", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "cap": cap})
-        pairs.write.mode("overwrite").parquet(output_path)
-        n_pairs = self.spark.read.parquet(output_path).count()
+        n_pairs = self._publish(pairs, output_path).count()
         snap = output_path + "_snapshot"
         packed = fh.select(
             (F.col("id") * 4096 + F.col("idx")).alias("id"), "sim")
-        save_hamming_snapshot(
-            hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
-                              cap_mode="represent"),
+        D.save_hamming_snapshot(
+            D.hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
+                                cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
         fh.unpersist()
-        self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "items_decodable": n_decodable,
-                            "subitem_rows": n_rows,
-                            "containment_pairs": n_pairs,
-                            "cap_telemetry": cap,
-                            "snapshot_path_out": snap}}
+        return [pairs], {"rows_in": n_in,
+                         "items_decodable": n_decodable,
+                         "subitem_rows": n_rows,
+                         "containment_pairs": n_pairs,
+                         "cap_telemetry": cap,
+                         "snapshot_path_out": snap}, n_pairs
 
     def _run_containment_probe(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+                               output_path: str) -> Handled:
         """'flag the new videos sharing frames with the snapshot at
         /p': the batch half of the containment lifecycle — hash the
         batch's sub-items, probe the persisted PACKED band snapshot
@@ -1305,62 +983,35 @@ class Pipeline:
         update the snapshot' appends the batch's fresh packed hashes
         — items NOT flagged against the store and not contained
         within the batch — the epoch-grow step."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hamming_band_keys,
-            load_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            _containment_rollup,
-            audio_window_hashes,
-            incremental_containment_pairs,
-            video_frame_hashes,
-        )
-
         modality = plan.get("modality", "video")
-        hashes_fn = (video_frame_hashes if modality == "video"
-                     else audio_window_hashes)
+        hashes_fn = (M.video_frame_hashes if modality == "video"
+                     else M.audio_window_hashes)
         shared_col = ("shared_frames" if modality == "video"
                       else "shared_windows")
         noun = "videos" if modality == "video" else "clips"
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": f"{modality} containment probe needs a "
-                              "snapshot path ('... sharing frames "
-                              "with the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            banded, geom = load_hamming_snapshot(
+        with _rejecting(f"no loadable hamming snapshot at "
+                        f"{plan['snapshot_path']}"):
+            banded, geom = D.load_hamming_snapshot(
                 self.spark, plan["snapshot_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable hamming snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(source_dir)
         n_in = media.count()
         fh = hashes_fn(media)
         fh = fh.withColumnRenamed(fh.columns[1], "idx").persist()
         n_decodable = fh.select("id").distinct().count()
-        pairs = incremental_containment_pairs(
+        pairs = M.incremental_containment_pairs(
             fh, banded, min_shared=plan["min_shared"],
             shared_col=shared_col, **geom)
         self.progress("containment_probe",
                       {"params": dict(plan),
                        "decodable": n_decodable, "geometry": geom})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)
+        back = self._publish(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
-                   f"{noun}_decodable": n_decodable,
-                   "containment_pairs": n_pairs,
-                   f"{noun}_flagged": n_flagged,
-                   "geometry": geom}
+        report = {"batch_rows": n_in,
+                  f"{noun}_decodable": n_decodable,
+                  "containment_pairs": n_pairs,
+                  f"{noun}_flagged": n_flagged,
+                  "geometry": geom}
         if plan.get("update"):
             # epoch grow: append packed hashes of items neither
             # flagged against the store nor contained within the
@@ -1369,7 +1020,7 @@ class Pipeline:
             n_before = banded.count()
             fresh = fh.join(back.select(F.col("id_new").alias("id"))
                             .distinct(), "id", "left_anti")
-            within = _containment_rollup(
+            within = M._containment_rollup(
                 fresh, plan["min_shared"], shared_col,
                 max_hamming=geom["max_hamming"],
                 n_blocks=geom["n_blocks"])
@@ -1377,75 +1028,57 @@ class Pipeline:
                               .distinct(), "id", "left_anti")
             packed = keep.select(
                 (F.col("id") * 4096 + F.col("idx")).alias("id"), "sim")
-            new_banded = hamming_band_keys(packed, **geom,
-                                           cap_mode="represent")
+            new_banded = D.hamming_band_keys(packed, **geom,
+                                             cap_mode="represent")
             (new_banded.repartitionByRange("band", "key")
              .sortWithinPartitions("band", "key")
              .write.mode("append").parquet(plan["snapshot_path"]))
             n_after = self.spark.read.parquet(
                 plan["snapshot_path"]).count()
             n_appended = keep.select("id").distinct().count()
-            reports.update({"snapshot_rows_before": n_before,
-                            "snapshot_rows_after": n_after,
-                            f"{noun}_appended": n_appended})
+            report.update({"snapshot_rows_before": n_before,
+                           "snapshot_rows_after": n_after,
+                           f"{noun}_appended": n_appended})
         fh.unpersist()
-        self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+        return [pairs], report, n_pairs
 
     def _run_band_snapshot(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'build a near-dup band snapshot of the corpus': persist the
         MinHash band table of the documents table at the sink — the
         build face of the neardup_probe target (the text twin of the
         media_dedup snapshot save). The layout is range-partitioned on
-        (band, slice-hash) semantics via ``compact_snapshot``'s
+        (band, slice-hash) semantics via ``compact_store``'s
         discipline: we range-partition + sort on (band) and rely on
         the probe's broadcast semi-join for pruning (slices are
         arrays — parquet min/max stats don't apply to them, which is
         why the probe path prunes by semi-join, not footer stats)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            minhash_band_keys,
-            minhash_band_plan,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        n_in = docs.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        n_in = _rows(docs, "documents")
         # 'at similarity 0.8' derives the banding geometry from the
         # advisor's S-curve fit instead of the default 16x4; later
         # probes infer the geometry from the snapshot's own rows
         # (band_table_geometry), so no sidecar is needed
         geo_kw, band_plan = {}, None
         if plan.get("threshold"):
-            band_plan = minhash_band_plan(plan["threshold"])
+            band_plan = D.minhash_band_plan(plan["threshold"])
             geo_kw = {"n_hashes": band_plan["n_hashes"],
                       "bands": band_plan["bands"]}
         # represent mode: a boilerplate flood stores one row per band
         # (flood-proof snapshot — probes/streams still collide with
         # the representative, fan-out stays cap-bounded)
-        bands = minhash_band_keys(docs, max_bucket=2000,
-                                  cap_mode="represent", **geo_kw)
-        (bands.repartitionByRange("band", "id")
-         .sortWithinPartitions("band", "id")
-         .write.mode("overwrite").parquet(output_path))
-        n_rows = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_rows, "path": output_path})
-        reports = {"plan": dict(plan), "docs_in": n_in,
-                   "band_rows": n_rows}
+        bands = D.minhash_band_keys(docs, max_bucket=2000,
+                                    cap_mode="represent", **geo_kw)
+        n_rows = self._publish(bands.repartitionByRange("band", "id")
+                               .sortWithinPartitions("band", "id"),
+                               output_path).count()
+        report = {"docs_in": n_in, "band_rows": n_rows}
         if band_plan is not None:
-            reports["band_plan"] = band_plan
-        return {"status": "complete", "outputs": [bands],
-                "reports": reports}
+            report["band_plan"] = band_plan
+        return [bands], report, n_rows
 
     def _run_neardup_probe(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'flag near-duplicate documents against the band snapshot at
         /path': the TEXT near-dup face of the media probes — band the
         source dir's documents with the MinHash LSH parameters and
@@ -1460,32 +1093,12 @@ class Pipeline:
         '... and update the snapshot' appends the batch's fresh
         (unflagged, within-batch-deduped) band keys — the text twin
         of the media epoch-grow step."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            band_table_geometry,
-            dedup_exact,
-            incremental_neardup_pairs,
-            minhash_band_keys,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "near-dup probe needs a snapshot path "
-                              "('... against the band snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejecting(f"no loadable band snapshot at "
+                        f"{plan['snapshot_path']}"):
             bands = self.spark.read.parquet(plan["snapshot_path"])
             if not {"id", "band", "slice"} <= set(bands.columns):
                 raise ValueError(
                     f"not a band table (columns {bands.columns})")
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable band snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         batch = Catalog(self.spark, source_dir).documents
         n_in = batch.count()
         cap: dict = {}
@@ -1493,29 +1106,27 @@ class Pipeline:
         # from its rows) — a threshold-tuned snapshot probes
         # correctly, and a mismatched banding would silently collide
         # with nothing
-        n_bands, n_hashes = band_table_geometry(bands)
-        pairs = incremental_neardup_pairs(
+        n_bands, n_hashes = D.band_table_geometry(bands)
+        pairs = D.incremental_neardup_pairs(
             batch, bands, n_hashes=n_hashes, bands=n_bands,
             cap_report=cap,
             hot_policy=plan.get("hot_policy", "drop"))
         self.progress("neardup_probe", {"params": dict(plan),
                                         "cap": cap})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)       # read-back
+        back = self._publish(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
-                   "flag_pairs": n_pairs, "docs_flagged": n_flagged,
-                   "cap_telemetry": cap}
+        report = {"batch_rows": n_in, "flag_pairs": n_pairs,
+                  "docs_flagged": n_flagged, "cap_telemetry": cap}
         if plan.get("update"):
             n_before = bands.count()
-            fresh = (dedup_exact(batch)
+            fresh = (D.dedup_exact(batch)
                      .join(back.select(F.col("id_new").alias("doc_id"))
                            .distinct(), "doc_id", "left_anti"))
             # append with the snapshot's geometry, not the default —
             # a tuned store must grow homogeneous
-            new_bands = minhash_band_keys(fresh, n_hashes=n_hashes,
-                                          bands=n_bands)
+            new_bands = D.minhash_band_keys(fresh, n_hashes=n_hashes,
+                                            bands=n_bands)
             new_bands.write.mode("append").parquet(
                 plan["snapshot_path"])
             n_after = self.spark.read.parquet(
@@ -1523,14 +1134,13 @@ class Pipeline:
             n_appended = fresh.count()
             self.progress("grow_snapshot", {"appended": n_appended,
                                             "rows_after": n_after})
-            reports.update({"snapshot_rows_before": n_before,
-                            "snapshot_rows_after": n_after,
-                            "docs_appended": n_appended})
-        self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+            report.update({"snapshot_rows_before": n_before,
+                           "snapshot_rows_after": n_after,
+                           "docs_appended": n_appended})
+        return [pairs], report, n_pairs
 
-    def _run_ingest_crawl(self, plan: dict, output_path: str) -> dict:
+    def _run_ingest_crawl(self, plan: dict, source_dir: str,
+                          output_path: str) -> Handled:
         """'extract text from the crawl at /path': WARC file(s) ->
         one row per 200-OK textual response, with the rendered line
         structure from html_to_lines as ``text``. ``doc_id`` is the
@@ -1543,24 +1153,7 @@ class Pipeline:
         dataops query's source_dir at the output directory chains
         crawl -> curate -> select -> pack -> shard end to end (write
         to ``<dir>/documents.parquet``)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            html_to_lines,
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            registered_domain,
-            url_host,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.warc import (
-            read_warc,
-        )
-
-        if not plan.get("crawl_path"):
-            return {"status": "rejected",
-                    "reason": "crawl ingest needs a path "
-                              "('... the crawl at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        recs = read_warc(self.spark, plan["crawl_path"])
+        recs = warc.read_warc(self.spark, plan["crawl_path"])
         frame = (recs.filter((F.col("warc_type") == "response")
                              & (F.col("http_status") == 200)
                              & F.col("text").isNotNull())
@@ -1570,21 +1163,18 @@ class Pipeline:
                          F.col("http_content_type").alias("content_type"),
                          F.when(F.col("http_content_type")
                                 .contains("html"),
-                                html_to_lines(F.col("text")))
+                                T.html_to_lines(F.col("text")))
                          .otherwise(F.col("text")).alias("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text")))
+                 .withColumn("lang", T.lang_id(F.col("text")))
                  .withColumn("source",
-                             registered_domain(url_host(F.col("url")))))
+                             WB.registered_domain(WB.url_host(F.col("url")))))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "rows": n}}
+        n = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"rows": n}, n
 
-    def _run_ingest_archives(self, plan: dict,
-                             output_path: str) -> dict:
+    def _run_ingest_archives(self, plan: dict, source_dir: str,
+                             output_path: str) -> Handled:
         """'extract text from the zip at /path' / 'ingest the tarball
         at /path': archives explode into one row per text-bearing
         member (txt/html/pdf/json tiers applied per kind by the
@@ -1594,20 +1184,7 @@ class Pipeline:
         silently dropped. ``doc_id`` hashes archive#member (stable
         across re-runs); ``source`` is the archive file name, so a
         multi-archive corpus keeps its provenance through curation."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            html_to_lines,
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.archives import (
-            read_archives,
-        )
-
-        if not plan.get("archive_path"):
-            return {"status": "rejected",
-                    "reason": "archive ingest needs a path "
-                              "('... the zip at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        rows = read_archives(self.spark, plan["archive_path"])
+        rows = archives.read_archives(self.spark, plan["archive_path"])
         summaries = rows.filter(F.col("kind") == "__archive__")
         stats = summaries.agg(
             F.count(F.lit(1)).alias("archives"),
@@ -1624,22 +1201,19 @@ class Pipeline:
                      F.element_at(F.split(F.col("archive"), "/"), -1)
                      .alias("source"),
                      F.when(F.col("kind") == "html",
-                            html_to_lines(F.col("text")))
+                            T.html_to_lines(F.col("text")))
                      .otherwise(F.col("text")).alias("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text"))))
+                 .withColumn("lang", T.lang_id(F.col("text"))))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "archives_seen": stats["archives"],
-                            "members_seen": int(stats["members"]),
-                            "members_skipped": int(stats["skipped"]),
-                            "rows_written": n}}
+        n = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"archives_seen": stats["archives"],
+                         "members_seen": int(stats["members"]),
+                         "members_skipped": int(stats["skipped"]),
+                         "rows_written": n}, n
 
-    def _run_ingest_pdfs(self, plan: dict, output_path: str) -> dict:
+    def _run_ingest_pdfs(self, plan: dict, source_dir: str,
+                         output_path: str) -> Handled:
         """'extract text from the pdfs at /path': PDF file(s) -> one
         row per file with extractable text (files with no text tier —
         encrypted, image-only, unsupported codecs — are counted in
@@ -1649,19 +1223,7 @@ class Pipeline:
         via the stopword heuristic, source = the file's directory
         name) so a follow-up dataops query chains pdfs -> curate ->
         select -> pack -> shard exactly like the crawl front door."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.pdf import (
-            read_pdfs,
-        )
-
-        if not plan.get("pdf_path"):
-            return {"status": "rejected",
-                    "reason": "pdf ingest needs a path "
-                              "('... the pdfs at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        rows = read_pdfs(self.spark, plan["pdf_path"])
+        rows = pdf.read_pdfs(self.spark, plan["pdf_path"])
         n_total = rows.count()
         frame = (rows.filter(F.col("text").isNotNull())
                  .select(F.xxhash64("path").alias("doc_id"),
@@ -1669,78 +1231,48 @@ class Pipeline:
                          F.col("n_pages"),
                          F.col("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text")))
+                 .withColumn("lang", T.lang_id(F.col("text")))
                  .withColumn("source", F.element_at(
                      F.split(F.col("url"), "/"), -2)))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "files_seen": n_total,
-                            "rows_written": n,
-                            "files_without_text": n_total - n}}
+        n = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"files_seen": n_total, "rows_written": n,
+                         "files_without_text": n_total - n}, n
 
     def _run_corpus_diff(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+                         output_path: str) -> Handled:
         """'diff ... against the snapshot at <path>': the CURRENT
         corpus (source_dir's documents table) vs a prior snapshot
         parquet of the same (doc_id, text) shape -> (doc_id, status)
         written to the sink plus a per-status count report. The diff
         itself is :func:`operators.dedup.corpus_diff` — only ids and
         32-bit content keys enter the shuffle."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            corpus_diff,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "corpus diff needs a snapshot path "
-                              "('... against the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         old = self.spark.read.parquet(plan["snapshot_path"])
         new = Catalog(self.spark, source_dir).documents
-        frame = corpus_diff(old, new)
+        frame = D.corpus_diff(old, new)
         self.progress("diff", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        counts = {r["status"]: r["n"] for r in self.spark.read
-                  .parquet(output_path)             # read-back verify
+        counts = {r["status"]: r["n"] for r in
+                  self._publish(frame, output_path)  # read-back verify
                   .groupBy("status").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}
-        self.progress("publish", {"rows": sum(counts.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "diff_counts": counts}}
+        return [frame], {"diff_counts": counts}, sum(counts.values())
 
     def _run_chunk_documents(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'chunk for RAG, size N stride M': scan-only overlapping
         chunking of the documents table -> (id, chunk_idx, chunk_text,
         n_tokens) parquet (:func:`operators.text.chunk_documents` —
         no shuffle; the 1->N expansion happens inside the write
         scan)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            chunk_documents,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        frame = chunk_documents(docs, size=plan["size"],
-                                stride=plan["stride"])
+        frame = T.chunk_documents(docs, size=plan["size"],
+                                  stride=plan["stride"])
         self.progress("chunk", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "rows_written": n}}
+        n = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"rows_written": n}, n
 
     def _run_classifier_train(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'train a quality classifier on the corpus and save it':
         gopher weak labels -> hashed-ngram logistic pipeline
         (Q7, ``operators/quality.py``), persisted with Spark ML's
@@ -1748,107 +1280,70 @@ class Pipeline:
         score-everywhere artifact. The report carries the label
         balance and the model's training accuracy on its own weak
         labels (a sanity floor, not an eval)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.quality import (
-            score_quality,
-            train_quality_classifier,
-            weak_labels_from_gopher,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        labeled = weak_labels_from_gopher(docs)
+        labeled = Q.weak_labels_from_gopher(docs)
         pos = labeled.agg(F.avg("label").alias("p")).first()["p"]
         if pos is None or pos in (0.0, 1.0):
-            return {"status": "rejected",
-                    "reason": f"weak labels are degenerate "
-                              f"(positive rate {pos}) — a one-class "
-                              f"corpus cannot train a classifier",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected(f"weak labels are degenerate "
+                           f"(positive rate {pos}) — a one-class "
+                           f"corpus cannot train a classifier")
         self.progress("train_classifier", {"params": dict(plan),
                                            "positive_rate":
                                                round(pos, 4)})
-        model = train_quality_classifier(labeled)
+        model = Q.train_quality_classifier(labeled)
         model.write().overwrite().save(output_path)
-        scored = score_quality(labeled, model).join(
+        scored = Q.score_quality(labeled, model).join(
             labeled.select(F.col("doc_id").alias("id"), "label"), "id")
         acc = scored.agg(F.avg(
             (((F.col("quality_prob") >= 0.5).cast("double"))
              == F.col("label")).cast("double")).alias("a")) \
             .first()["a"]
-        self.progress("publish", {"path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan),
-                            "positive_rate": round(pos, 4),
-                            "train_accuracy": round(acc, 4),
-                            "model_path": output_path}}
+        return [], {"positive_rate": round(pos, 4),
+                    "train_accuracy": round(acc, 4),
+                    "model_path": output_path}, {"path": output_path}
 
     def _run_classifier_score(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'score the corpus with the classifier at /path': reload
         the persisted Q7 model (Spark ML native loader) and write
         (id, quality_prob) per document — one scan, the
         score-everywhere half of the lifecycle. Rejects a missing or
         unloadable model path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.quality import (
-            score_quality,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("model_path"):
-            return {"status": "rejected",
-                    "reason": "scoring needs a model path ('with "
-                              "the classifier at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            from pyspark.ml import PipelineModel
-            model = PipelineModel.load(plan["model_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no classifier loadable at "
-                              f"{plan['model_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
+        with _rejecting(f"no classifier loadable at "
+                        f"{plan['model_path']}"):
+            model = Q.load_quality_classifier(plan["model_path"])
         docs = Catalog(self.spark, source_dir).documents
-        scores = score_quality(docs, model)
+        scores = Q.score_quality(docs, model)
         self.progress("score", {"params": dict(plan)})
-        scores.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        agg = back.agg(F.count(F.lit(1)).alias("n"),
-                       F.round(F.avg("quality_prob"), 4)
-                       .alias("mean")).first()
-        self.progress("publish", {"rows": agg["n"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [scores],
-                "reports": {"plan": dict(plan), "rows": agg["n"],
-                            "mean_quality_prob": agg["mean"]}}
+        agg = self._publish(scores, output_path).agg(   # read-back
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("quality_prob"), 4).alias("mean")).first()
+        return [scores], {"rows": agg["n"],
+                          "mean_quality_prob": agg["mean"]}, agg["n"]
 
     def _load_tokenizer_store(self, path: str):
         """Load a persisted tokenizer store, inferring its kind from
         its own columns (the tokenize_pack convention). Returns
         ``(kind, kw)`` where kw feeds straight into
-        :func:`operators.bpe.tokenizer_stats`; raises on an
-        unreadable/unrecognized store — callers turn that into their
-        own actionable rejection."""
-        store = self.spark.read.parquet(path)
-        cols = set(store.columns)
-        if {"rank", "a", "b"} <= cols:
-            return "bpe", {"merges": [(r["a"], r["b"]) for r in
-                                      store.orderBy("rank").collect()]}
-        if {"piece", "logprob"} <= cols:
-            return "unigram", {"pieces": [(r["piece"], r["logprob"])
-                                          for r in
-                                          store.orderBy("rank")
-                                          .collect()]}
-        raise ValueError(
-            f"columns {sorted(cols)} are neither a BPE (rank,a,b) nor "
-            f"a unigram (rank,piece,logprob) store")
+        :func:`operators.bpe.tokenizer_stats`; an unreadable or
+        unrecognized store rejects."""
+        with _rejecting(f"no tokenizer readable at {path}"):
+            store = self.spark.read.parquet(path)
+            cols = set(store.columns)
+            if {"rank", "a", "b"} <= cols:
+                return "bpe", {"merges": [(r["a"], r["b"]) for r in
+                                          store.orderBy("rank").collect()]}
+            if {"piece", "logprob"} <= cols:
+                return "unigram", {"pieces": [(r["piece"], r["logprob"])
+                                              for r in
+                                              store.orderBy("rank")
+                                              .collect()]}
+            raise ValueError(
+                f"columns {sorted(cols)} are neither a BPE (rank,a,b) "
+                f"nor a unigram (rank,piece,logprob) store")
 
     def _run_tokenizer_stats(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'report tokenizer stats with the tokenizer at /path': the
         artifact-validation telemetry — per-language fertility
         (subword tokens per word; a language far above the corpus
@@ -1860,35 +1355,16 @@ class Pipeline:
         table lands at the sink; the report inlines it (strata-
         bounded) plus the corpus-wide roll-up. One count-only Arrow
         pass + one strata-bounded aggregate."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            tokenizer_stats,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("tokenizer_path"):
-            return {"status": "rejected",
-                    "reason": "tokenizer stats need a tokenizer path "
-                              "('... with the tokenizer at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            kind, kw = self._load_tokenizer_store(plan["tokenizer_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no tokenizer readable at "
-                              f"{plan['tokenizer_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        kind, kw = self._load_tokenizer_store(plan["tokenizer_path"])
         docs = Catalog(self.spark, source_dir).documents
         # a source whose documents table carries no lang column still
         # gets the corpus-wide telemetry (the 'all' stratum) instead
         # of an uncaught AnalysisException
         lang_col = "lang" if "lang" in docs.columns else None
-        per_lang = tokenizer_stats(docs, lang_col=lang_col, **kw)
+        per_lang = BPE.tokenizer_stats(docs, lang_col=lang_col, **kw)
         self.progress("tokenizer_stats", {"params": dict(plan),
                                           "kind": kind})
-        per_lang.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)    # read-back
+        back = self._publish(per_lang, output_path)    # read-back
         rows = sorted((r.asDict() for r in back.collect()),
                       key=lambda r: r["lang"])
         tot_toks = sum(r["n_tokens"] for r in rows)
@@ -1896,14 +1372,11 @@ class Pipeline:
         overall = {"n_docs": sum(r["n_docs"] for r in rows),
                    "fertility": round(tot_toks / tot_words, 4)
                    if tot_words else None}
-        self.progress("publish", {"rows": len(rows),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [per_lang],
-                "reports": {"plan": dict(plan), "kind": kind,
-                            "per_lang": rows, "overall": overall}}
+        return [per_lang], {"kind": kind, "per_lang": rows,
+                            "overall": overall}, len(rows)
 
     def _run_tokenizer_train(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'train a bpe tokenizer on the corpus, 300 merges, and save
         it' / 'train a unigram tokenizer, vocab 500': the tokenizer
         is THE canonical train-once artifact — every downstream token
@@ -1913,35 +1386,21 @@ class Pipeline:
         'tokenize the corpus with the tokenizer at /path and pack
         ...' loads it instead of retraining (bit-identical encoding,
         pinned in tests)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            save_bpe,
-            train_bpe,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-            save_unigram,
-            train_unigram,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         self.progress("train_tokenizer", {"params": dict(plan)})
         if plan["model"] == "unigram":
-            pieces = train_unigram(docs,
-                                   vocab_size=max(plan["n_merges"],
-                                                  64))
-            report = save_unigram(self.spark, pieces, output_path)
+            pieces = U.train_unigram(docs,
+                                     vocab_size=max(plan["n_merges"],
+                                                    64))
+            report = U.save_unigram(self.spark, pieces, output_path)
         else:
-            merges = train_bpe(docs, n_merges=plan["n_merges"])
-            report = save_bpe(self.spark, merges, output_path)
-        self.progress("publish", {"path": output_path, **report})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report,
-                            "tokenizer_path": output_path}}
+            merges = BPE.train_bpe(docs, n_merges=plan["n_merges"])
+            report = BPE.save_bpe(self.spark, merges, output_path)
+        return [], {**report, "tokenizer_path": output_path}, \
+            {"path": output_path, **report}
 
     def _run_tokenize_pack(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'tokenize the corpus and pack 512-token sequences': train a
         BPE merge table on the corpus, encode straight to ids
         (``bpe.encode_ids``), concatenate-and-split into fixed-length
@@ -1953,18 +1412,6 @@ class Pipeline:
         surface. The merge/piece table + vocab size go into the
         report — the reusable artifacts a production run persists
         beside the shards."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            bpe_vocab,
-            encode_ids,
-            train_bpe,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.packing import (
-            pack_sequences,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         if plan["n_buckets"] is None:
             # corpus-derived (see derive_n_buckets): the one packing
@@ -1977,80 +1424,54 @@ class Pipeline:
         if plan.get("tokenizer_path"):
             # the train-once reuse face: load the persisted artifact,
             # kind inferred from its own columns — never retrain
-            try:
+            with _rejecting(f"no tokenizer readable at "
+                            f"{plan['tokenizer_path']}"):
                 cols = set(self.spark.read.parquet(
                     plan["tokenizer_path"]).columns)
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no tokenizer readable at "
-                                  f"{plan['tokenizer_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
             if {"rank", "a", "b"} <= cols:
-                from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-                    load_bpe,
-                )
-                loaded_bpe = load_bpe(self.spark,
-                                      plan["tokenizer_path"])
+                loaded_bpe = BPE.load_bpe(self.spark,
+                                          plan["tokenizer_path"])
                 plan["model"] = "bpe"
             elif {"rank", "piece", "logprob"} <= cols:
-                from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-                    load_unigram,
-                )
-                loaded_pieces = load_unigram(self.spark,
-                                             plan["tokenizer_path"])
+                loaded_pieces = U.load_unigram(self.spark,
+                                               plan["tokenizer_path"])
                 plan["model"] = "unigram"
             else:
-                return {"status": "rejected",
-                        "reason": f"parquet at "
-                                  f"{plan['tokenizer_path']} is not "
-                                  f"a tokenizer store (columns "
-                                  f"{sorted(cols)})",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
+                raise Rejected(f"parquet at {plan['tokenizer_path']} is "
+                               f"not a tokenizer store (columns "
+                               f"{sorted(cols)})")
         if plan.get("model") == "unigram":
             # TK3: the unigram-LM trainer behind the same target —
             # n_merges doubles as the piece-vocabulary budget
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-                apply_unigram,
-                train_unigram,
-                unigram_vocab,
-            )
             pieces = (loaded_pieces if loaded_pieces is not None
-                      else train_unigram(
+                      else U.train_unigram(
                           docs, vocab_size=max(plan["n_merges"], 64)))
-            vocab = unigram_vocab(pieces)
+            vocab = U.unigram_vocab(pieces)
             merges = pieces          # report carries the piece table size
             self.progress("tokenize", {"params": dict(plan),
                                        "vocab_size": len(vocab)})
-            tok = apply_unigram(docs, pieces, ids=True)
+            tok = U.apply_unigram(docs, pieces, ids=True)
         else:
             merges = (loaded_bpe if loaded_bpe is not None
-                      else train_bpe(docs, n_merges=plan["n_merges"]))
-            vocab = bpe_vocab(merges)
+                      else BPE.train_bpe(docs, n_merges=plan["n_merges"]))
+            vocab = BPE.bpe_vocab(merges)
             self.progress("tokenize", {"params": dict(plan),
                                        "vocab_size": len(vocab)})
-            tok = encode_ids(docs, merges)
+            tok = BPE.encode_ids(docs, merges)
         # eos: the id just past the vocab is the reserved per-document
         # separator (trainers size the embedding at vocab_size + 1)
         eos_id = len(vocab) if plan.get("eos") else None
-        frame = pack_sequences(tok, plan["seq_len"],
-                               n_buckets=plan["n_buckets"],
-                               eos_id=eos_id)
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        n_seq = back.count()
-        self.progress("publish", {"rows": n_seq, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "vocab_size": len(vocab),
-                            "eos_id": eos_id,
-                            "n_merges": len(merges),
-                            "n_sequences": n_seq,
-                            "tokens_packed": n_seq * plan["seq_len"]}}
+        frame = PK.pack_sequences(tok, plan["seq_len"],
+                                  n_buckets=plan["n_buckets"],
+                                  eos_id=eos_id)
+        n_seq = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"vocab_size": len(vocab), "eos_id": eos_id,
+                         "n_merges": len(merges),
+                         "n_sequences": n_seq,
+                         "tokens_packed": n_seq * plan["seq_len"]}, n_seq
 
     def _run_corpus_census(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'census the corpus' / 'report corpus statistics': the
         mergeable per-stratum census (:func:`operators.text.
         corpus_census`) over the documents table — the standalone
@@ -2062,19 +1483,10 @@ class Pipeline:
         histogram (:func:`operators.text.census_histogram` — same
         mergeable-sums contract) to ``<output>_hist`` and inlines the
         per-bucket doc counts."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            census_histogram,
-            corpus_census,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        frame = corpus_census(docs)
+        frame = T.corpus_census(docs)
         self.progress("census", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(frame, output_path)      # read-back
         langs = {r["stratum"]: r["n_docs"] for r in
                  back.filter(F.col("kind") == "lang").collect()}
         total = back.filter(F.col("kind") == "__total__").first()
@@ -2082,27 +1494,21 @@ class Pipeline:
             # an empty corpus yields zero GROUPING SETS rows — reject
             # with a reason instead of a NoneType subscript crash
             # (matches the sibling targets' empty-corpus contract)
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        reports = {"plan": dict(plan),
-                   "n_docs": total["n_docs"],
-                   "n_tokens": total["n_tokens"],
-                   "n_chars": total["n_chars"],
-                   "docs_per_lang": langs}
+            raise Rejected("documents table is empty")
+        report = {"n_docs": total["n_docs"],
+                  "n_tokens": total["n_tokens"],
+                  "n_chars": total["n_chars"],
+                  "docs_per_lang": langs}
         outputs = [frame]
         if plan.get("histogram"):
-            hist = census_histogram(docs)
+            hist = T.census_histogram(docs)
             hist.write.mode("overwrite").parquet(output_path + "_hist")
             hb = self.spark.read.parquet(output_path + "_hist")
-            reports["docs_per_length_bucket"] = {
+            report["docs_per_length_bucket"] = {
                 int(r["bucket"]): r["n_docs"] for r in
                 hb.filter(F.col("kind") == "__total__").collect()}
-            reports["histogram_path"] = output_path + "_hist"
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-                histogram_quantiles,
-            )
-            reports["length_quantiles_per_lang"] = histogram_quantiles(
+            report["histogram_path"] = output_path + "_hist"
+            report["length_quantiles_per_lang"] = T.histogram_quantiles(
                 hb, quantiles=(0.5, 0.9, 0.99), kind="lang")
             outputs.append(hist)
         if plan.get("distinct"):
@@ -2111,38 +1517,27 @@ class Pipeline:
             # can't maintain incrementally (values repeat across
             # batches); sketches land beside the census so the next
             # epoch folds instead of re-scanning
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-                hash32,
-                normalize_text,
-            )
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-                census_distinct,
-                estimate_distinct,
-            )
             fp = docs.withColumn(
-                "fp", hash32(normalize_text(
+                "fp", D.hash32(D.normalize_text(
                     F.coalesce(F.col("text"), F.lit("")))))
-            dcen = census_distinct(fp, "fp")
+            dcen = T.census_distinct(fp, "fp")
             dcen.write.mode("overwrite").parquet(output_path + "_distinct")
             db = self.spark.read.parquet(output_path + "_distinct")
             ests = {(r["kind"], r["stratum"]): (r["n_distinct"], r["n_rows"])
-                    for r in estimate_distinct(db).collect()}
-            reports["distinct_docs_per_lang"] = {
+                    for r in T.estimate_distinct(db).collect()}
+            report["distinct_docs_per_lang"] = {
                 s: round(v[0], 1) for (k, s), v in ests.items()
                 if k == "lang"}
             tot = ests[("__total__", "__total__")]
-            reports["distinct_docs_total"] = round(tot[0], 1)
-            reports["approx_dup_rate"] = round(
+            report["distinct_docs_total"] = round(tot[0], 1)
+            report["approx_dup_rate"] = round(
                 1.0 - min(1.0, tot[0] / tot[1]), 4) if tot[1] else 0.0
-            reports["distinct_path"] = output_path + "_distinct"
+            report["distinct_path"] = output_path + "_distinct"
             outputs.append(dcen)
-        self.progress("publish", {"rows": back.count(),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": outputs,
-                "reports": reports}
+        return outputs, report, back.count()
 
     def _run_semantic_dedup(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+                            output_path: str) -> Handled:
         """'semantically dedup ...': SemDeDup over the embeddings
         table (:func:`operators.similarity.semantic_dedup`) — kept
         rows written to the sink with an in/out count report.
@@ -2154,37 +1549,22 @@ class Pipeline:
         corpus to keep per-cluster size (and so total pair work)
         bounded; the chosen value lands in the progress report and
         the plan echo."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            semantic_dedup,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        # k-means cannot fit zero rows — an empty corpus is an
+        # actionable rejection, not an opaque executor stacktrace
+        n_in = _rows(emb, "embeddings")
         if not plan.get("n_clusters"):
             plan["n_clusters"] = derive_n_clusters(n_in)
-        frame = semantic_dedup(emb, threshold=plan["threshold"],
-                               n_clusters=plan["n_clusters"],
-                               keep=plan["keep"])
+        frame = S.semantic_dedup(emb, threshold=plan["threshold"],
+                                 n_clusters=plan["n_clusters"],
+                                 keep=plan["keep"])
         self.progress("dedup", {"params": dict(plan),
                                 "n_clusters": plan["n_clusters"]})
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "rows_in": n_in, "rows_kept": n_out}}
+        n_out = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"rows_in": n_in, "rows_kept": n_out}, n_out
 
     def _run_cluster_corpus(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+                            output_path: str) -> Handled:
         """'cluster the embeddings into 12 topics': standalone corpus
         clustering (:func:`operators.similarity.cluster_embeddings`)
         — per-vector assignments + coherence land at the sink, the
@@ -2193,96 +1573,58 @@ class Pipeline:
         per-cluster sizes + mean center-cosine. An unnamed cluster
         count derives from the corpus via :func:`derive_n_clusters`
         (constant target cluster SIZE, same reasoning as SemDeDup)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            cluster_embeddings,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        # k-means cannot fit zero rows — an empty corpus is an
+        # actionable rejection, not an opaque executor stacktrace
+        n_in = _rows(emb, "embeddings")
         if not plan.get("n_clusters"):
             plan["n_clusters"] = derive_n_clusters(n_in)
-        assign, centers = cluster_embeddings(
+        assign, centers = S.cluster_embeddings(
             emb, n_clusters=plan["n_clusters"])
         self.progress("cluster", {"params": dict(plan),
                                   "n_clusters": plan["n_clusters"]})
-        assign.write.mode("overwrite").parquet(output_path)
+        back = self._publish(assign, output_path)      # read-back
         centers.write.mode("overwrite").parquet(output_path + "_centers")
-        back = self.spark.read.parquet(output_path)      # read-back
         stats = (back.groupBy("cluster")
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.round(F.avg("center_cos"), 4).alias("coherence"))
                  .collect())
-        self.progress("publish", {"rows": back.count(),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [assign, centers],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "centers_path": output_path + "_centers",
-                            "cluster_sizes": {int(r["cluster"]): r["n"]
-                                              for r in stats},
-                            "cluster_coherence": {int(r["cluster"]):
-                                                  r["coherence"]
-                                                  for r in stats}}}
+        return [assign, centers], {
+            "rows_in": n_in,
+            "centers_path": output_path + "_centers",
+            "cluster_sizes": {int(r["cluster"]): r["n"] for r in stats},
+            "cluster_coherence": {int(r["cluster"]): r["coherence"]
+                                  for r in stats}}, back.count()
 
     def _run_cluster_assign(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+                            output_path: str) -> Handled:
         """'assign the new embeddings to the clusters at <path>': map
         a fresh batch onto a persisted cluster map
         (:func:`operators.similarity.assign_to_centers` — broadcast
         GEMM argmin, no refit, no rescan of the fit corpus; the
         data-map twin of the frozen-index append). Rejected with an
         actionable reason when the path is missing or unreadable."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            assign_to_centers,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("centers_path"):
-            return {"status": "rejected",
-                    "reason": "cluster_assign needs 'clusters at <path>'",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejecting(f"no cluster map readable at "
+                        f"{plan['centers_path']}", cause=False):
             centers = self.spark.read.parquet(plan["centers_path"])
             # explicit raise, not assert: -O strips asserts and a
             # malformed store must reject, not crash downstream
             if not {"cluster", "center"} <= set(centers.columns):
                 raise ValueError("not a cluster map")
-        except Exception:
-            return {"status": "rejected",
-                    "reason": ("no cluster map readable at "
-                               f"{plan['centers_path']}"),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        assign = assign_to_centers(emb, centers)
+        n_in = _rows(emb, "embeddings")
+        assign = S.assign_to_centers(emb, centers)
         self.progress("assign", {"params": dict(plan),
                                  "n_centers": centers.count()})
-        assign.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(assign, output_path)      # read-back
         stats = (back.groupBy("cluster")
                  .agg(F.count(F.lit(1)).alias("n")).collect())
-        self.progress("publish", {"rows": back.count(),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [assign],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "cluster_sizes": {int(r["cluster"]): r["n"]
-                                              for r in stats}}}
+        return [assign], {"rows_in": n_in,
+                          "cluster_sizes": {int(r["cluster"]): r["n"]
+                                            for r in stats}}, back.count()
 
-    def _run_verify_shards(self, plan: dict, output_path: str) -> dict:
+    def _run_verify_shards(self, plan: dict, source_dir: str,
+                           output_path: str) -> Handled:
         """'verify the shards at /path against the manifest': the
         receiving side of a data shipment — recompute the
         order-insensitive per-shard fingerprints over the shard set
@@ -2292,69 +1634,40 @@ class Pipeline:
         actionable reason when no shard path is named; the verdict +
         mismatched shard ids land in the report AND at the sink as a
         one-row-per-shard status frame."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            verify_shard_manifest,
-        )
-
-        if not plan.get("shards_path"):
-            return {"status": "rejected",
-                    "reason": "verify_shards needs 'shards at <path>'",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         mpath = plan.get("manifest_path") or \
             plan["shards_path"].rstrip("/") + "_manifest"
-        try:
+        with _rejecting(f"no manifest readable at {mpath}", cause=False):
             manifest = self.spark.read.parquet(mpath)
-        except Exception:
-            return {"status": "rejected",
-                    "reason": f"no manifest readable at {mpath}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         self.progress("verify", {"params": dict(plan),
                                  "manifest_path": mpath})
         # a sha256 column marks a write_webdataset manifest — verify
         # the tar files byte-for-byte (distributed sha2 scan) instead
         # of recomputing parquet row fingerprints
         is_wds = "sha256" in manifest.columns
-        try:
-            if is_wds:
-                from dynamic_etl_pipeline_thesis_ii_spark.sources. \
-                    sinks import verify_webdataset
-                chk = verify_webdataset(self.spark,
-                                        plan["shards_path"], manifest)
-            else:
-                chk = verify_shard_manifest(
-                    self.spark, plan["shards_path"], manifest)
-        except Exception:
-            return {"status": "rejected",
-                    "reason": ("no shard set readable at "
-                               f"{plan['shards_path']}"),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        with _rejecting(f"no shard set readable at "
+                        f"{plan['shards_path']}", cause=False):
+            verify = (sinks.verify_webdataset if is_wds
+                      else sinks.verify_shard_manifest)
+            chk = verify(self.spark, plan["shards_path"], manifest)
         bad = set(chk["mismatched"])
         # union so an EXTRA shard directory (present on disk, absent
         # from the manifest) still gets a status row
-        if is_wds:
-            shard_ids = {r["file"] for r in manifest.collect()} | bad
-            status_frame = self.spark.createDataFrame(
-                [(s, "mismatch" if s in bad else "ok")
-                 for s in sorted(shard_ids)],
-                "file string, status string")
-        else:
-            shard_ids = ({int(r["shard"]) for r in manifest.collect()}
-                         | bad)
-            status_frame = self.spark.createDataFrame(
-                [(s, "mismatch" if s in bad else "ok")
-                 for s in sorted(shard_ids)],
-                "shard int, status string")
-        status_frame.write.mode("overwrite").parquet(output_path)
-        self.progress("publish", {"rows": chk["n_shards"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [status_frame],
-                "reports": {"plan": dict(plan), "ok": chk["ok"],
-                            "n_shards": chk["n_shards"],
-                            "manifest_path": mpath,
-                            "mismatched_shards": chk["mismatched"]}}
+        col, cast, schema = (("file", str, "file string") if is_wds
+                             else ("shard", int, "shard int"))
+        shard_ids = {cast(r[col]) for r in manifest.collect()} | bad
+        status_frame = self.spark.createDataFrame(
+            [(s, "mismatch" if s in bad else "ok")
+             for s in sorted(shard_ids)],
+            f"{schema}, status string")
+        self._publish(status_frame, output_path, read_back=False)
+        return [status_frame], {"ok": chk["ok"],
+                                "n_shards": chk["n_shards"],
+                                "manifest_path": mpath,
+                                "mismatched_shards": chk["mismatched"]}, \
+            chk["n_shards"]
 
     def _run_data_card(self, plan: dict, source_dir: str,
-                       output_path: str) -> dict:
+                       output_path: str) -> Handled:
         """'generate a data card for the corpus': the
         Datasheets-for-Datasets capstone — one run composing the
         corpus's headline composition (census: docs/tokens/chars per
@@ -2368,37 +1681,12 @@ class Pipeline:
         companion). Four one-scan aggregations total, every
         driver-side object bounded by |strata| — never by corpus
         size."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hash32,
-            normalize_text,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            census_distinct,
-            census_histogram,
-            code_features,
-            corpus_census,
-            estimate_distinct,
-            gopher_rules,
-            histogram_quantiles,
-            lang_id,
-            quality_features,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            write_run_artifacts,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        census = corpus_census(docs)
-        census.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        census = T.corpus_census(docs)
+        back = self._publish(census, output_path)      # read-back
         total = back.filter(F.col("kind") == "__total__").first()
         if total is None or total["n_docs"] == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected("documents table is empty")
         self.progress("census", {"params": dict(plan)})
         comp = {
             "n_docs": total["n_docs"], "n_tokens": total["n_tokens"],
@@ -2410,32 +1698,32 @@ class Pipeline:
                                 back.filter(F.col("kind") == "source")
                                 .collect()},
         }
-        hist = census_histogram(docs)
+        hist = T.census_histogram(docs)
         hist.write.mode("overwrite").parquet(output_path + "_hist")
         hist = self.spark.read.parquet(output_path + "_hist")
         # quantiles read the persisted sidecar — the card's consumer
         # gets the full distribution, not just three cut points
-        lengths = histogram_quantiles(hist, quantiles=(0.5, 0.9, 0.99),
-                                      kind="lang")
+        lengths = T.histogram_quantiles(hist, quantiles=(0.5, 0.9, 0.99),
+                                        kind="lang")
         self.progress("lengths", {"langs": len(lengths)})
         fp = docs.withColumn(
-            "fp", hash32(normalize_text(
+            "fp", D.hash32(D.normalize_text(
                 F.coalesce(F.col("text"), F.lit("")))))
-        dist = estimate_distinct(census_distinct(fp, "fp")) \
+        dist = T.estimate_distinct(T.census_distinct(fp, "fp")) \
             .filter(F.col("kind") == "__total__").first()
         dup = {"distinct_docs_estimate": round(dist["n_distinct"], 1),
                "approx_dup_rate": round(
                    1.0 - min(1.0, dist["n_distinct"] / dist["n_rows"]),
                    4) if dist["n_rows"] else 0.0}
-        q = quality_features(F.col("text"))
-        g = gopher_rules(F.col("text"))
-        c = code_features(F.col("text"))
+        q = T.quality_features(F.col("text"))
+        g = T.gopher_rules(F.col("text"))
+        c = T.code_features(F.col("text"))
         qrow = docs.agg(
             F.round(F.avg(q["quality_score"]), 4).alias("mean_quality"),
             F.round(F.avg(g["gopher_pass"].cast("double")), 4)
             .alias("gopher_pass_rate"),
             F.round(F.avg(c["code_score"]), 4).alias("mean_code_score"),
-            F.round(F.avg((lang_id(F.col("text")) == F.col("lang"))
+            F.round(F.avg((T.lang_id(F.col("text")) == F.col("lang"))
                           .cast("double")), 4)
             .alias("lang_id_agreement")).first()
         quality = {k: qrow[k] for k in
@@ -2445,11 +1733,8 @@ class Pipeline:
         # governance: the datasheet's licensing section — per-class
         # doc counts from the T19 scan (one extra aggregate over the
         # same text column; |classes| <= 5 driver-side)
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_class,
-        )
         licensing = {r["c"]: r["n"] for r in
-                     docs.groupBy(license_class(F.col("text"))
+                     docs.groupBy(T.license_class(F.col("text"))
                                   .alias("c"))
                      .agg(F.count(F.lit(1)).alias("n")).collect()}
         card = {"composition": comp,
@@ -2467,16 +1752,13 @@ class Pipeline:
         # not just what the corpus IS but how a budgeted training run
         # would draw from it.
         if plan.get("mix_budget") is not None:
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-                unimax_epochs,
-            )
             toks_per_lang = {
                 r["stratum"]: r["n_tokens"]
                 for r in back.filter((F.col("kind") == "lang")
                                      & (F.col("stratum") != "__null__"))
                 .collect()}
-            eps = unimax_epochs(toks_per_lang, plan["mix_budget"],
-                                plan["mix_epochs"])
+            eps = SA.unimax_epochs(toks_per_lang, plan["mix_budget"],
+                                   plan["mix_epochs"])
             card["suggested_mix"] = {
                 "budget_tokens": plan["mix_budget"],
                 "max_epochs": plan["mix_epochs"],
@@ -2502,23 +1784,12 @@ class Pipeline:
         # count-only Arrow pass. A NAMED-but-unreadable store rejects
         # (the user asked for a section the run cannot produce).
         if plan.get("tokenizer_path"):
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-                tokenizer_stats,
-            )
-            try:
-                kind, kw = self._load_tokenizer_store(
-                    plan["tokenizer_path"])
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no tokenizer readable at "
-                                  f"{plan['tokenizer_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
+            kind, kw = self._load_tokenizer_store(plan["tokenizer_path"])
             lang_col = "lang" if "lang" in docs.columns else None
             t_rows = sorted(
                 (r.asDict() for r in
-                 tokenizer_stats(docs, lang_col=lang_col,
-                                 **kw).collect()),
+                 BPE.tokenizer_stats(docs, lang_col=lang_col,
+                                     **kw).collect()),
                 key=lambda r: r["lang"])
             t_toks = sum(r["n_tokens"] for r in t_rows)
             t_words = sum(r["n_words"] for r in t_rows)
@@ -2544,37 +1815,37 @@ class Pipeline:
         if media is None:
             card["media"] = {"present": False}
         else:
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-                audio_ahash,
-                image_dhash,
-                media_census,
-                video_vhash,
-            )
             kinds = {r["stratum"]: {"n_items": r["n_items"],
                                     "n_bytes": r["n_bytes"]}
-                     for r in media_census(media).collect()
+                     for r in M.media_census(media).collect()
                      if r["kind"] == "media_kind"}
             card["media"] = {"present": True, "per_kind": kinds}
-            for mod, noun, fp in (("image", "images", image_dhash),
-                                  ("audio", "clips", audio_ahash),
-                                  ("video", "videos", video_vhash)):
+            for mod, noun, fp in (("image", "images", M.image_dhash),
+                                  ("audio", "clips", M.audio_ahash),
+                                  ("video", "videos", M.video_vhash)):
                 n_kind = kinds.get(mod, {}).get("n_items", 0)
                 n_dec = fp(media).count() if n_kind else 0
                 card["media"][f"{noun}_decodable"] = n_dec
                 card["media"][f"{mod}_decodable_fraction"] = round(
                     n_dec / n_kind, 4) if n_kind else None
             self.progress("media", card["media"])
-        card_path = write_run_artifacts(output_path + "_card",
-                                        {"data_card": card})
-        self.progress("publish", {"rows": back.count(),
-                                  "path": output_path,
-                                  "card_path": card_path})
-        return {"status": "complete", "outputs": [census],
-                "reports": {"plan": dict(plan), "data_card": card,
-                            "card_path": card_path}}
+        card_path = sinks.write_run_artifacts(output_path + "_card",
+                                              {"data_card": card})
+        return [census], {"data_card": card, "card_path": card_path}, \
+            {"rows": back.count(), "path": output_path,
+             "card_path": card_path}
+
+    def _benchmark(self, plan: dict) -> DataFrame:
+        """The plan's benchmark table; an unreadable one rejects (an
+        actionable reason, not an AnalysisException stacktrace)."""
+        with _rejecting(f"no benchmark readable at "
+                        f"{plan['benchmark_path']}"):
+            bench = self.spark.read.parquet(plan["benchmark_path"])
+            bench.schema
+        return bench
 
     def _run_decontaminate(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'decontaminate the corpus against the benchmark at /path':
         drop corpus rows that leak benchmark content, surviving rows
         land at the sink with an in/kept/flagged report.
@@ -2594,34 +1865,10 @@ class Pipeline:
         streaming corpus scan — no corpus shuffle; the flagged-id set
         (bounded by the benchmark's neighborhood) broadcasts into the
         anti-join."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            contamination_pairs,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            semantic_contamination,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("benchmark_path"):
-            return {"status": "rejected",
-                    "reason": "decontamination needs a benchmark path "
-                              "('... against the benchmark at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            bench = self.spark.read.parquet(plan["benchmark_path"])
-        except Exception as exc:
-            # a missing/unreadable benchmark is an actionable
-            # rejection (the verify_shards/ann_index_append contract),
-            # not an AnalysisException stacktrace
-            return {"status": "rejected",
-                    "reason": f"no benchmark readable at "
-                              f"{plan['benchmark_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        bench = self._benchmark(plan)
         if plan["semantic"]:
             corpus = Catalog(self.spark, source_dir).embeddings
-            pairs = semantic_contamination(
+            pairs = S.semantic_contamination(
                 corpus, bench, threshold=plan["threshold"])
             flagged = (pairs.select(F.col("id_a").alias("vec_id"))
                        .distinct())
@@ -2629,7 +1876,7 @@ class Pipeline:
                                "left_anti")
         else:
             corpus = Catalog(self.spark, source_dir).documents
-            pairs = contamination_pairs(
+            pairs = D.contamination_pairs(
                 corpus, bench, k=5, min_overlap=plan["min_overlap"])
             flagged = (pairs.select(F.col("id_a").alias("doc_id"))
                        .distinct())
@@ -2639,16 +1886,12 @@ class Pipeline:
         n_flagged = flagged.count()
         self.progress("decontaminate", {"params": dict(plan),
                                         "flagged": n_flagged})
-        kept.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [kept],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "rows_flagged": n_flagged,
-                            "rows_kept": n_out}}
+        n_out = self._publish(kept, output_path).count()  # read-back
+        return [kept], {"rows_in": n_in, "rows_flagged": n_flagged,
+                        "rows_kept": n_out}, n_out
 
     def _run_decontaminate_spans(self, plan: dict, source_dir: str,
-                                 output_path: str) -> dict:
+                                 output_path: str) -> Handled:
         """'remove benchmark passages from the corpus against the
         benchmark at /path (windows of 20 tokens)': span-surgical
         decontamination (D19 — :func:`operators.dedup.
@@ -2658,61 +1901,24 @@ class Pipeline:
         documents quoting one eval item. 'flag'/'find' phrasings
         report the span table without rewriting. Rejects a missing
         or unreadable benchmark path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            apply_span_removal,
-            benchmark_span_flags,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("benchmark_path"):
-            return {"status": "rejected",
-                    "reason": "span decontamination needs a "
-                              "benchmark path ('against the "
-                              "benchmark at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            bench = self.spark.read.parquet(plan["benchmark_path"])
-            bench.schema
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no benchmark readable at "
-                              f"{plan['benchmark_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
+        bench = self._benchmark(plan)
         corpus = Catalog(self.spark, source_dir).documents
-        spans = benchmark_span_flags(corpus, bench, w=plan["window"])
+        spans = D.benchmark_span_flags(corpus, bench, w=plan["window"])
         if plan.get("flag_only"):
-            spans.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
-            n_spans = back.count()
-            n_docs = back.select("id").distinct().count()
-            self.progress("publish", {"rows": n_spans,
-                                      "path": output_path})
-            return {"status": "complete", "outputs": [spans],
-                    "reports": {"plan": dict(plan),
-                                "spans_flagged": n_spans,
-                                "docs_affected": n_docs}}
-        cleaned = apply_span_removal(corpus, spans)
+            return self._publish_spans(spans, output_path)
+        cleaned = D.apply_span_removal(corpus, spans)
         self.progress("decontaminate_spans", {"params": dict(plan)})
-        cleaned.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        agg = back.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
-            .alias("affected"),
-            F.sum("n_removed").alias("removed")).first()
-        self.progress("publish", {"rows": agg["docs"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [cleaned],
-                "reports": {"plan": dict(plan),
-                            "docs_out": agg["docs"],
-                            "docs_affected": int(agg["affected"] or 0),
-                            "tokens_removed": int(agg["removed"] or 0)}}
+        return self._publish_cut(cleaned, output_path)
+
+    def _bm25_index(self, index_path: str) -> str:
+        """The persisted BM25 store's root; an unreadable one rejects."""
+        store = index_path.rstrip("/")
+        with _rejecting(f"no retrieval index readable at {index_path}"):
+            self.spark.read.parquet(store + "/stats").first()
+        return store
 
     def _run_retrieve(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+                      output_path: str) -> Handled:
         """'search the corpus for "hash join strategies", top 5' /
         'retrieve the best documents for "x" and "y"': BM25 lexical
         retrieval (:func:`operators.text.bm25_topk`) over the
@@ -2730,38 +1936,16 @@ class Pipeline:
         parquet, the corpus never rescans (the lang/source join back
         to the documents table is a pruned two-column projection, no
         text read)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            bm25_topk,
-            search_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("queries"):
-            return {"status": "rejected",
-                    "reason": "retrieval needs at least one quoted "
-                              "query string ('search the corpus for "
-                              "\"...\"')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         docs = Catalog(self.spark, source_dir).documents
         qset = self.spark.createDataFrame(
             [(i + 1, q) for i, q in enumerate(plan["queries"])],
             "query_id bigint, query_text string")
         if plan.get("index_path"):
-            try:
-                self.spark.read.parquet(
-                    plan["index_path"].rstrip("/") + "/stats").first()
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no retrieval index readable at "
-                                  f"{plan['index_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
-            hits = search_bm25_index(self.spark, plan["index_path"],
-                                     qset, k=plan["k"])
+            self._bm25_index(plan["index_path"])
+            hits = T.search_bm25_index(self.spark, plan["index_path"],
+                                       qset, k=plan["k"])
         else:
-            hits = bm25_topk(docs, qset, k=plan["k"])
+            hits = T.bm25_topk(docs, qset, k=plan["k"])
         frame = (hits
                  .join(F.broadcast(qset), "query_id")
                  .join(docs.select(F.col("doc_id").alias("id"),
@@ -2769,19 +1953,16 @@ class Pipeline:
                  .select("query_id", "query_text", "rank", "id",
                          "bm25", "n_terms", "lang", "source"))
         self.progress("retrieve", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(frame, output_path)      # read-back
         counts = {r["query_text"]: r["n"]
                   for r in back.groupBy("query_text")
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
-        self.progress("publish", {"rows": sum(counts.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "hits_per_query": counts,
-                            "rows_written": sum(counts.values())}}
+        return [frame], {"hits_per_query": counts,
+                         "rows_written": sum(counts.values())}, \
+            sum(counts.values())
 
     def _run_corpus_store_build(self, plan: dict, source_dir: str,
-                                output_path: str) -> dict:
+                                output_path: str) -> Handled:
         """'build a bucketed corpus store, 32 buckets': persist the
         documents table hash-bucketed by doc_id
         (:func:`sources.sinks.save_corpus_store`) so every later
@@ -2789,24 +1970,14 @@ class Pipeline:
         only the buckets holding batch keys. Bucket count derives
         corpus-proportionally when unnamed (constant rows per bucket
         — the rewrite unit must stay batch-scale at 100 TB)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            save_corpus_store,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         self.progress("build_store", {"params": dict(plan)})
-        report = save_corpus_store(docs, output_path,
-                                   n_buckets=plan["n_buckets"])
-        self.progress("publish", {"rows": report["rows"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        report = sinks.save_corpus_store(docs, output_path,
+                                         n_buckets=plan["n_buckets"])
+        return [], report, report["rows"]
 
     def _run_webdataset_write(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'export the corpus as webdataset, 8 shards' / 'write the
         corpus to webdataset shards at 64 mb': tar-shard export for
         streaming training loaders (:func:`sources.sinks.
@@ -2815,49 +1986,40 @@ class Pipeline:
         manifest beside them). Shard count derives from corpus bytes
         against the mb target when unnamed; a duplicate-key corpus is
         rejected actionably (WebDataset keys must be unique)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            SinkError,
-            write_webdataset,
-        )
-
         self.progress("export", {"params": dict(plan)})
         dest = output_path.rstrip("/") + "/webdataset"
         if plan.get("table") == "media":
-            from dynamic_etl_pipeline_thesis_ii_spark.operators. \
-                multimodal import container_ext
-            media = self._media_or_none(source_dir)
-            if media is None:
-                return {"status": "rejected",
-                        "reason": f"no media table readable at "
-                                  f"{source_dir}/media.parquet",
-                        "outputs": [], "reports": {"plan": dict(plan)}}
+            media = self._media(source_dir)
             frame = media.withColumn(
-                "__ext", container_ext("payload", "kind")
+                "__ext", M.container_ext("payload", "kind")
                 if "kind" in media.columns
-                else container_ext("payload"))
+                else M.container_ext("payload"))
             kwargs = dict(key_col="media_id", text_col=None,
                           binary_col="payload", ext_col="__ext")
         else:
             frame = Catalog(self.spark, source_dir).documents
             kwargs = dict(key_col="doc_id")
         try:
-            report = write_webdataset(
+            report = sinks.write_webdataset(
                 frame, dest,
                 n_shards=plan["n_shards"],
                 target_shard_mb=plan["target_shard_mb"], **kwargs)
-        except SinkError as exc:
-            return {"status": "rejected", "reason": str(exc),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        self.progress("publish", {"rows": report["rows_written"],
-                                  "path": dest})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        except sinks.SinkError as exc:
+            raise Rejected(str(exc)) from exc
+        return [], report, {"rows": report["rows_written"], "path": dest}
+
+    def _corpus_store(self, plan: dict) -> str:
+        """The plan's bucketed corpus store root; a path without the
+        store's geometry sidecar rejects."""
+        store = plan["store_path"].rstrip("/")
+        with _rejecting(f"no corpus store readable at "
+                        f"{plan['store_path']} (build one with 'build a "
+                        f"bucketed corpus store')"):
+            self.spark.read.parquet(store + "_meta").first()
+        return store
 
     def _run_corpus_upsert(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'upsert the batch into the corpus store at /path': MERGE
         the source dir's documents into a persisted bucketed store
         (:func:`sources.sinks.merge_into_corpus` — batch rows replace
@@ -2865,42 +2027,16 @@ class Pipeline:
         rewrite, untouched directories stay byte-identical). The
         batch also lands at the run's output for lineage. Rejects a
         missing path or a path without a store geometry sidecar."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            merge_into_corpus,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "corpus upsert needs a store path "
-                              "('... into the corpus store at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        store = plan["store_path"].rstrip("/")
-        try:
-            self.spark.read.parquet(store + "_meta").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no corpus store readable at "
-                              f"{plan['store_path']} (build one "
-                              f"with 'build a bucketed corpus "
-                              f"store'): {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
+        store = self._corpus_store(plan)
         batch = Catalog(self.spark, source_dir).documents
-        report = merge_into_corpus(self.spark, store, batch)
+        report = sinks.merge_into_corpus(self.spark, store, batch)
         self.progress("upsert", {"params": dict(plan), **report})
-        batch.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out, "path": store})
-        return {"status": "complete", "outputs": [batch],
-                "reports": {"plan": dict(plan), **report,
-                            "batch_rows": n_out}}
+        n_out = self._publish(batch, output_path).count()
+        return [batch], {**report, "batch_rows": n_out}, \
+            {"rows": n_out, "path": store}
 
-    def _run_corpus_rebucket(self, plan: dict,
-                             output_path: str) -> dict:
+    def _run_corpus_rebucket(self, plan: dict, source_dir: str,
+                             output_path: str) -> Handled:
         """'rebucket the corpus store at /path': re-derive the
         store's bucket count from its CURRENT rows and rewrite to the
         run's output (:func:`sources.sinks.rebucket_corpus_store` —
@@ -2911,36 +2047,33 @@ class Pipeline:
         restores constant rows/bucket and later merges against the
         new path are batch-cost again. Rejects a missing path or a
         path without the store's geometry sidecar."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            rebucket_corpus_store,
-        )
-
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "rebucket needs a store path "
-                              "('rebucket the corpus store at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        store = plan["store_path"].rstrip("/")
-        try:
-            self.spark.read.parquet(store + "_meta").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no corpus store readable at "
-                              f"{plan['store_path']} (build one "
-                              f"with 'build a bucketed corpus "
-                              f"store'): {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        report = rebucket_corpus_store(self.spark, store, output_path)
+        store = self._corpus_store(plan)
+        report = sinks.rebucket_corpus_store(self.spark, store,
+                                             output_path)
         self.progress("rebucket", {"params": dict(plan), **report})
-        self.progress("publish", {"rows": report["rows"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        return [], report, report["rows"]
+
+    def _resolve_n_probe(self, plan: dict) -> tuple[int, str]:
+        """n_probe resolution order: explicit in the query ('probing
+        4 lists') > the store's tuned _meta sidecar (a prior 'tune
+        the ann index at /path' run) > static default 2. The source
+        that won rides the report, so an untuned store is visible,
+        not silent."""
+        if plan.get("n_probe") is not None:
+            return plan["n_probe"], "query"
+        tuned = S.load_index_tuning(self.spark, plan["index_path"])
+        if tuned and tuned.get("tuned_n_probe") is not None:
+            return tuned["tuned_n_probe"], "tuned"
+        return 2, "default"
+
+    def _load_index(self, index_path: str):
+        """The persisted IVF-PQ store (centers, books, codes,
+        rotation); an unloadable one rejects."""
+        with _rejecting(f"no loadable index store at {index_path}"):
+            return S.load_ivfpq_index(self.spark, index_path)
 
     def _run_hybrid_search(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'find documents like doc 42 using both keywords and
         embeddings, top 5': hybrid more-like-this — the named
         documents' own text feeds the BM25 tower and their own
@@ -2960,38 +2093,10 @@ class Pipeline:
         Scale: the query set is the handful of named ids — both
         towers broadcast it; the corpus never shuffles on anything
         but its own aggregates (store-backed: the probed lists)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            hybrid_topk,
-            load_index_tuning,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("doc_ids"):
-            return {"status": "rejected",
-                    "reason": "hybrid search needs document ids "
-                              "('like doc 42')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         dense_index, n_probe, probe_source = None, None, None
         if plan.get("index_path"):
-            try:
-                dense_index = load_ivfpq_index(self.spark,
-                                               plan["index_path"])
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no loadable index store at "
-                                  f"{plan['index_path']}: {exc}",
-                        "outputs": [], "reports": {"plan": dict(plan)}}
-            n_probe, probe_source = plan.get("n_probe"), "query"
-            if n_probe is None:
-                tuned = load_index_tuning(self.spark,
-                                          plan["index_path"])
-                if tuned and tuned.get("tuned_n_probe") is not None:
-                    n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-                else:
-                    n_probe, probe_source = 2, "default"
+            dense_index = self._load_index(plan["index_path"])
+            n_probe, probe_source = self._resolve_n_probe(plan)
         cat = Catalog(self.spark, source_dir)
         docs = cat.documents.select("doc_id", "text")
         emb = cat.embeddings
@@ -3007,63 +2112,46 @@ class Pipeline:
                  queries.select("query_id").collect()]
         missing = sorted(set(ids) - set(found))
         if missing:
-            return {"status": "rejected",
-                    "reason": f"no document+embedding for ids "
-                              f"{missing} ('like doc N' needs both)",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected(f"no document+embedding for ids "
+                           f"{missing} ('like doc N' needs both)")
         cands = emb.select(F.col("vec_id").alias("c_id"),
                            F.col("embedding").alias("c_vec"))
-        hits = (hybrid_topk(docs, cands, queries,
-                            k=plan["k"] + 1, k_pool=plan["k"] + 10,
-                            dense_index=dense_index,
-                            n_probe=n_probe or 2)
+        hits = (S.hybrid_topk(docs, cands, queries,
+                              k=plan["k"] + 1, k_pool=plan["k"] + 10,
+                              dense_index=dense_index,
+                              n_probe=n_probe or 2)
                 .filter(F.col("id") != F.col("query_id")))
         self.progress("hybrid_search", {"params": dict(plan),
                                         "dense_arm": ("ivf" if dense_index
                                                       else "brute")})
-        hits.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(hits, output_path)      # read-back
         counts = {int(r["query_id"]): r["n"]
                   for r in back.groupBy("query_id")
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
         both = back.filter(F.col("n_arms") == 2).count()
-        self.progress("publish", {"rows": sum(counts.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [hits],
-                "reports": {"plan": dict(plan),
-                            "hits_per_query": counts,
-                            "hits_in_both_towers": both,
-                            "dense_arm": ("ivf" if dense_index
-                                          else "brute"),
-                            **({"n_probe": n_probe,
-                                "n_probe_source": probe_source}
-                               if dense_index else {})}}
+        return [hits], {"hits_per_query": counts,
+                        "hits_in_both_towers": both,
+                        "dense_arm": ("ivf" if dense_index
+                                      else "brute"),
+                        **({"n_probe": n_probe,
+                            "n_probe_source": probe_source}
+                           if dense_index else {})}, sum(counts.values())
 
     def _run_bm25_index_build(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'build a retrieval index over the corpus': persist the BM25
         inverted index (:func:`operators.text.save_bm25_index` —
         tok-sorted postings + df/dl/stats sidecars) at the output.
         The lexical twin of `_run_ann_index_build`: build pays the
         corpus scan exactly once, every later 'search the index at
         /path for "..."' answers at query cost."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            save_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         self.progress("build_index", {"params": dict(plan)})
-        report = save_bm25_index(docs, output_path)
-        self.progress("publish", {"rows": report["n_postings"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        report = T.save_bm25_index(docs, output_path)
+        return [], report, report["n_postings"]
 
     def _run_bm25_index_append(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+                               output_path: str) -> Handled:
         """'add the new documents to the retrieval index at /path':
         the lexical epoch-N+1 step, twin of `_run_ann_index_append` —
         the source dir's documents tokenize/aggregate at BATCH cost
@@ -3073,41 +2161,17 @@ class Pipeline:
         later 'search the index at /path' folds the sidecars so
         scores equal a full rebuild exactly. Already-indexed ids are
         broadcast-prune skipped and counted in the report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            append_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": "index append needs an index path "
-                              "('... to the retrieval index at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        store = plan["index_path"].rstrip("/")
-        try:
-            self.spark.read.parquet(store + "/stats").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no retrieval index readable at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
+        store = self._bm25_index(plan["index_path"])
         docs = Catalog(self.spark, source_dir).documents
-        report = append_bm25_index(self.spark, store, docs)
+        report = T.append_bm25_index(self.spark, store, docs)
         self.progress("append_index", {"params": dict(plan),
                                        **report})
         n_after = self.spark.read.parquet(store + "/dl").count()
-        self.progress("publish", {"rows": report["n_new_postings"],
-                                  "path": store})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report,
-                            "docs_after": n_after}}
+        return [], {**report, "docs_after": n_after}, \
+            {"rows": report["n_new_postings"], "path": store}
 
     def _run_ann_search(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+                        output_path: str) -> Handled:
         """'find the 10 nearest neighbors for each document, with an
         opq rotation': corpus self-kNN over the embeddings table via
         the IVF-PQ index (build + search — codes-only ADC with an
@@ -3123,30 +2187,14 @@ class Pipeline:
         sizing curve — probe cost |Q|·n_probe·n/lists stays bounded),
         rerank touches k·|Q| full vectors, everything else joins
         codes against broadcast LUTs."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_build,
-            ivfpq_search,
-            opq_rotation,
-            pq_reconstruction_mse,
-            pq_train,
-            rotate_vectors,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         if plan.get("index_path"):
             return self._run_ann_search_store(plan, source_dir,
                                               output_path)
         emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            # (the cluster_corpus/semantic_dedup empty-corpus contract)
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        # k-means cannot fit zero rows — an empty corpus is an
+        # actionable rejection, not an opaque executor stacktrace
+        # (the cluster_corpus/semantic_dedup empty-corpus contract)
+        n = _rows(emb, "embeddings")
         n_clusters = max(16, int(n ** 0.5))
         cand = emb.select(F.col("vec_id").alias("c_id"),
                           F.col("embedding").alias("c_vec"))
@@ -3154,12 +2202,12 @@ class Pipeline:
                          F.col("embedding").alias("q_vec"))
         rotation, opq_report = None, None
         if plan["opq"]:
-            rotation = opq_rotation(emb, vec_col="embedding", m=4)
-            raw_books = pq_train(emb, vec_col="embedding", m=4)
-            rot = rotate_vectors(emb, rotation, vec_col="embedding")
-            rot_books = pq_train(rot, vec_col="embedding", m=4)
-            mse_raw = pq_reconstruction_mse(emb, raw_books)
-            mse_rot = pq_reconstruction_mse(rot, rot_books)
+            rotation = S.opq_rotation(emb, vec_col="embedding", m=4)
+            raw_books = S.pq_train(emb, vec_col="embedding", m=4)
+            rot = S.rotate_vectors(emb, rotation, vec_col="embedding")
+            rot_books = S.pq_train(rot, vec_col="embedding", m=4)
+            mse_raw = S.pq_reconstruction_mse(emb, raw_books)
+            mse_rot = S.pq_reconstruction_mse(rot, rot_books)
             opq_report = {
                 "mse_raw": round(mse_raw, 6),
                 "mse_rotated": round(mse_rot, 6),
@@ -3172,7 +2220,7 @@ class Pipeline:
         self.progress("plan_index", {"params": dict(plan),
                                      "n_clusters": n_clusters,
                                      "opq": opq_report})
-        centers, books, coded = ivfpq_build(
+        centers, books, coded = S.ivfpq_build(
             cand, n_clusters=n_clusters, m=4, rotation=rotation)
         # search k+1 with the exact rerank tier, drop self matches
         # (dist 0 to itself), re-rank to k — every surviving row is a
@@ -3181,26 +2229,21 @@ class Pipeline:
         # self-kNN means |queries| == |corpus|: past a broadcastable
         # size the |Q|-sized probe-LUT / rerank frames must SHUFFLE-
         # join (keyed exchanges) instead of shipping to every executor
-        hits = ivfpq_search(centers, books, coded, qry, k=k + 1,
-                            n_probe=2, rerank=2 * (k + 1),
-                            candidates=cand, rotation=rotation,
-                            broadcast_queries=n <= 100_000)
-        from pyspark.sql import Window
+        hits = S.ivfpq_search(centers, books, coded, qry, k=k + 1,
+                              n_probe=2, rerank=2 * (k + 1),
+                              candidates=cand, rotation=rotation,
+                              broadcast_queries=n <= 100_000)
         w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(),
                                                F.col("c_id").asc())
         frame = (hits.filter(F.col("q_id") != F.col("c_id"))
                  .withColumn("rank", F.row_number().over(w))
                  .filter(F.col("rank") <= k))
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "n_clusters": n_clusters,
-                            "opq": opq_report, "rows_written": n_out}}
+        n_out = self._publish(frame, output_path).count()  # read-back
+        return [frame], {"n_vectors": n, "n_clusters": n_clusters,
+                         "opq": opq_report, "rows_written": n_out}, n_out
 
     def _run_ann_search_store(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'find the 10 nearest neighbors for each document using the
         ann index at /path': search the PERSISTED IVF-PQ store
         instead of rebuilding — the serve face that closes the
@@ -3213,36 +2256,11 @@ class Pipeline:
         exact-rerank tier here — results carry the ``adc`` column
         the index serves by); self matches drop by id when the store
         indexes the querying corpus itself."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_search,
-            load_index_tuning,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        centers, books, coded, rotation = self._load_index(
+            plan["index_path"])
         emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_probe, probe_source = plan.get("n_probe"), "query"
-        if n_probe is None:
-            tuned = load_index_tuning(self.spark, plan["index_path"])
-            if tuned and tuned.get("tuned_n_probe") is not None:
-                n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-            else:
-                n_probe, probe_source = 2, "default"
+        n = _rows(emb, "embeddings")
+        n_probe, probe_source = self._resolve_n_probe(plan)
         k = plan["k"]
         qry = emb.select(F.col("vec_id").alias("q_id"),
                          F.col("embedding").alias("q_vec"))
@@ -3251,27 +2269,21 @@ class Pipeline:
                                        "n_probe_source": probe_source})
         # corpus-sized query batches must not broadcast their LUTs
         # (the self-kNN rule in _run_ann_search)
-        hits = ivfpq_search(centers, books, coded, qry, k=k + 1,
-                            n_probe=n_probe, rotation=rotation,
-                            broadcast_queries=n <= 100_000)
-        from pyspark.sql import Window
+        hits = S.ivfpq_search(centers, books, coded, qry, k=k + 1,
+                              n_probe=n_probe, rotation=rotation,
+                              broadcast_queries=n <= 100_000)
         w = Window.partitionBy("q_id").orderBy(F.col("adc").asc(),
                                                F.col("c_id").asc())
         frame = (hits.filter(F.col("q_id") != F.col("c_id"))
                  .withColumn("rank", F.row_number().over(w))
                  .filter(F.col("rank") <= k))
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_queries": n,
-                            "n_probe": n_probe,
-                            "n_probe_source": probe_source,
-                            "ranking": "adc",
-                            "rows_written": n_out}}
+        n_out = self._publish(frame, output_path).count()
+        return [frame], {"n_queries": n, "n_probe": n_probe,
+                         "n_probe_source": probe_source,
+                         "ranking": "adc", "rows_written": n_out}, n_out
 
     def _run_ann_index_build(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'build an ann index over the embeddings, 64 lists, with an
         opq rotation': fit the IVF-PQ index once and persist the
         complete store (centers/books/codes/rotation, plain parquet —
@@ -3281,45 +2293,29 @@ class Pipeline:
         step at 100 TB and happens exactly once. When the query names
         no list count it derives as sqrt(n) (the standard IVF sizing
         curve: probe cost |Q|·n_probe·n/lists stays bounded)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_build,
-            opq_rotation,
-            save_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            # same empty-corpus contract as _run_ann_search: reject
-            # before KMeans.fit sees zero rows
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        # same empty-corpus contract as _run_ann_search: reject
+        # before KMeans.fit sees zero rows
+        n = _rows(emb, "embeddings")
         n_lists = plan["n_lists"] or max(16, int(n ** 0.5))
-        rotation = (opq_rotation(emb, vec_col="embedding", m=4)
+        rotation = (S.opq_rotation(emb, vec_col="embedding", m=4)
                     if plan["opq"] else None)
         cand = emb.select(F.col("vec_id").alias("c_id"),
                           F.col("embedding").alias("c_vec"))
-        centers, books, coded = ivfpq_build(
+        centers, books, coded = S.ivfpq_build(
             cand, n_clusters=n_lists, m=4, rotation=rotation)
         self.progress("build_index", {"params": dict(plan),
                                       "n_lists": n_lists})
-        save_ivfpq_index(self.spark, centers, books, coded,
-                         output_path, rotation=rotation)
+        S.save_ivfpq_index(self.spark, centers, books, coded,
+                           output_path, rotation=rotation)
         n_codes = self.spark.read.parquet(
             output_path + "/codes").count()       # read-back
-        self.progress("publish", {"rows": n_codes, "path": output_path})
-        return {"status": "complete", "outputs": [coded],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "n_lists": n_lists, "m": 4,
-                            "opq": rotation is not None,
-                            "codes_written": n_codes}}
+        return [coded], {"n_vectors": n, "n_lists": n_lists, "m": 4,
+                         "opq": rotation is not None,
+                         "codes_written": n_codes}, n_codes
 
     def _run_ann_index_append(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+                              output_path: str) -> Handled:
         """'append the new vectors to the index at /path': the ANN
         epoch-N+1 step, twin of the Bloom snapshot reload in
         `_run_incremental_dedup` — the source dir's embeddings encode
@@ -3331,81 +2327,38 @@ class Pipeline:
         store intact). The batch's own codes also land at the run's
         output for lineage. The report carries before/appended/after
         counts, with `after` from a read-back of the grown store."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_append,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": "index append needs an index path "
-                              "('... to the index at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        centers, books, coded, rotation = self._load_index(
+            plan["index_path"])
         n_before = coded.count()
         batch = Catalog(self.spark, source_dir).embeddings.select(
             F.col("vec_id").alias("c_id"),
             F.col("embedding").alias("c_vec"))
-        appended = ivfpq_append(centers, books, batch,
-                                rotation=rotation)
-        appended.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)   # read-back
+        appended = S.ivfpq_append(centers, books, batch,
+                                  rotation=rotation)
+        back = self._publish(appended, output_path)   # read-back
         n_appended = back.count()
         self.progress("append_index", {"params": dict(plan),
                                        "appended": n_appended})
         back.write.mode("append").parquet(plan["index_path"] + "/codes")
         n_after = self.spark.read.parquet(
             plan["index_path"] + "/codes").count()
-        self.progress("publish", {"rows": n_appended,
-                                  "path": plan["index_path"]})
-        return {"status": "complete", "outputs": [appended],
-                "reports": {"plan": dict(plan),
-                            "codes_before": n_before,
+        return [appended], {"codes_before": n_before,
                             "codes_appended": n_appended,
-                            "codes_after": n_after}}
+                            "codes_after": n_after}, \
+            {"rows": n_appended, "path": plan["index_path"]}
 
     def _load_index_and_query_sample(self, plan: dict,
-                                     source_dir: str, noun: str):
+                                     source_dir: str):
         """Shared front door of the index-telemetry targets
         (`ann_recall`, `ann_tune`): load the persisted IVF-PQ store
         and draw the deterministic query sample from the source
-        dir's embeddings. Returns the rejection dict on failure,
-        else ``(centers, books, coded, rotation, queries, cand)``."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": f"{noun} needs an index path "
-                              f"('... the ann index at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        dir's embeddings. Rejects an unloadable store or an empty
+        corpus, else returns ``(centers, books, coded, rotation,
+        queries, cand)``."""
+        centers, books, coded, rotation = self._load_index(
+            plan["index_path"])
         emb = Catalog(self.spark, source_dir).embeddings
-        if emb.count() == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        _rows(emb, "embeddings")
         # deterministic content-hash sample order (a bare limit would
         # take whichever partitions answered first); limit = TakeOrdered
         sample = (emb.orderBy(F.pmod(F.xxhash64("vec_id"),
@@ -3418,7 +2371,7 @@ class Pipeline:
         return centers, books, coded, rotation, queries, cand
 
     def _run_ann_tune(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+                      output_path: str) -> Handled:
         """'tune the ann index at /path for recall 0.9': close the
         n_probe knob into a loop against the recall telemetry
         (:func:`operators.similarity.ann_nprobe_tune`) — double
@@ -3432,34 +2385,23 @@ class Pipeline:
         ``_meta`` sidecar (:func:`save_index_tuning`) so a later
         recall/search run against the same store defaults to the
         tuned setting — the loop stays closed across runs."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ann_nprobe_tune,
-            save_index_tuning,
-        )
-
-        loaded = self._load_index_and_query_sample(plan, source_dir,
-                                                   "index tuning")
-        if isinstance(loaded, dict):
-            return loaded
-        centers, books, coded, rotation, queries, cand = loaded
-        report = ann_nprobe_tune(centers, books, coded, queries, cand,
-                                 k=plan["k"],
-                                 target_recall=plan["target_recall"],
-                                 rotation=rotation)
-        save_index_tuning(self.spark, plan["index_path"], report)
+        centers, books, coded, rotation, queries, cand = \
+            self._load_index_and_query_sample(plan, source_dir)
+        report = S.ann_nprobe_tune(centers, books, coded, queries, cand,
+                                   k=plan["k"],
+                                   target_recall=plan["target_recall"],
+                                   rotation=rotation)
+        S.save_index_tuning(self.spark, plan["index_path"], report)
         report["meta_saved"] = True
         self.progress("tune", {"params": dict(plan), **report})
         curve = self.spark.createDataFrame(
             [(c["n_probe"], c["recall"]) for c in report["curve"]],
             "n_probe int, recall double")
-        curve.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [curve],
-                "reports": {"plan": dict(plan), **report}}
+        n_out = self._publish(curve, output_path).count()
+        return [curve], report, n_out
 
     def _run_ann_recall(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+                        output_path: str) -> Handled:
         """'estimate the recall of the ann index at /path, top 10,
         probing 4 lists': recall@k telemetry for a persisted IVF-PQ
         store (:func:`operators.similarity.ann_recall_estimate`) —
@@ -3473,52 +2415,25 @@ class Pipeline:
         at the sink and the report carries the recall. Cost: one
         corpus scan against |sample| broadcast queries — cheap by
         construction; the sample size caps it."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ann_recall_estimate,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        loaded = self._load_index_and_query_sample(plan, source_dir,
-                                                   "recall estimation")
-        if isinstance(loaded, dict):
-            return loaded
-        centers, books, coded, rotation, queries, cand = loaded
-        # n_probe resolution order: explicit in the query ('probing 4
-        # lists') > the store's tuned _meta sidecar (a prior 'tune the
-        # ann index at /path' run) > static default 2. The report says
-        # which source won, so an untuned store is visible, not silent.
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            load_index_tuning,
-        )
-        n_probe, probe_source = plan.get("n_probe"), "query"
-        if n_probe is None:
-            tuned = load_index_tuning(self.spark, plan["index_path"])
-            if tuned and tuned.get("tuned_n_probe") is not None:
-                n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-            else:
-                n_probe, probe_source = 2, "default"
-        report, hits = ann_recall_estimate(centers, books, coded,
-                                           queries, cand, k=plan["k"],
-                                           n_probe=n_probe,
-                                           rotation=rotation,
-                                           return_hits=True)
+        centers, books, coded, rotation, queries, cand = \
+            self._load_index_and_query_sample(plan, source_dir)
+        n_probe, probe_source = self._resolve_n_probe(plan)
+        report, hits = S.ann_recall_estimate(centers, books, coded,
+                                             queries, cand, k=plan["k"],
+                                             n_probe=n_probe,
+                                             rotation=rotation,
+                                             return_hits=True)
         report["n_probe_source"] = probe_source
         self.progress("recall", {"params": dict(plan), **report})
         # hits is the CACHED frame the estimate graded — write it
         # instead of re-running the identical index search
-        hits.write.mode("overwrite").parquet(output_path)
+        back = self._publish(hits, output_path)
         hits.unpersist()
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [hits],
-                "reports": {"plan": dict(plan), **report,
-                            "rows_written": n_out}}
+        n_out = back.count()
+        return [hits], {**report, "rows_written": n_out}, n_out
 
     def _run_split_corpus(self, plan: dict, source_dir: str,
-                          output_path: str) -> dict:
+                          output_path: str) -> Handled:
         """'split the corpus into train/val/test 80/10/10 without
         leakage': deterministic split assignment over the documents
         table. The default is per-document salted-hash assignment
@@ -3530,72 +2445,45 @@ class Pipeline:
         can never straddle train/test. Per-split counts land in the
         report; fractions normalize from an '80/10/10' triple when
         the query names one."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            leakage_safe_split,
-            split_assign,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         if plan["leak_safe"]:
-            pairs = minhash_lsh_pairs(docs)
-            frame = leakage_safe_split(docs, plan["splits"], pairs)
+            pairs = D.minhash_lsh_pairs(docs)
+            frame = SA.leakage_safe_split(docs, plan["splits"], pairs)
         else:
-            frame = split_assign(docs, plan["splits"],
-                                 key_col="doc_id")
+            frame = SA.split_assign(docs, plan["splits"],
+                                    key_col="doc_id")
         self.progress("split", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)   # read-back
+        back = self._publish(frame, output_path)   # read-back
         counts = {r["split"]: r["n"] for r in
                   back.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}
-        self.progress("publish", {"rows": sum(counts.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "split_counts": counts,
-                            "rows": sum(counts.values())}}
+        return [frame], {"split_counts": counts,
+                         "rows": sum(counts.values())}, \
+            sum(counts.values())
 
     def _run_temperature_mix(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+                             output_path: str) -> Handled:
         """'flatten the language mix with temperature 0.5': alpha
         sampling of the documents table
         (:func:`operators.sampling.temperature_mix`) with per-stratum
         before/after counts in the report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            temperature_mix,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
         strata = plan["strata"]
-        frame = temperature_mix(docs, strata, alpha=plan["alpha"],
-                                key_col="doc_id", salt="temp")
+        frame = SA.temperature_mix(docs, strata, alpha=plan["alpha"],
+                                   key_col="doc_id", salt="temp")
         self.progress("sample", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(frame, output_path)      # read-back
         after = {r[strata]: r["n"] for r in
                  back.groupBy(strata).agg(F.count(F.lit(1)).alias("n"))
                  .collect()}
         before = {r[strata]: r["n"] for r in
                   docs.groupBy(strata).agg(F.count(F.lit(1)).alias("n"))
                   .collect()}
-        self.progress("publish", {"rows": sum(after.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "counts_before": before,
-                            "counts_after": after}}
+        return [frame], {"counts_before": before,
+                         "counts_after": after}, sum(after.values())
 
     def _run_shuffle_order(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+                           output_path: str) -> Handled:
         """'shuffle the corpus for training, epoch 3': write the
         deterministic global training order
         (:func:`operators.sampling.shuffle_order`) — (doc_id, epoch,
@@ -3605,31 +2493,21 @@ class Pipeline:
         rank range is gap-free 0..n-1 (max rank + count from one
         aggregate over the read-back — no corpus-sized driver
         state)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            shuffle_order,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents.select("doc_id")
-        frame = shuffle_order(docs, epoch=plan["epoch"])
+        frame = SA.shuffle_order(docs, epoch=plan["epoch"])
         self.progress("shuffle", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        agg = back.agg(F.count(F.lit(1)).alias("n"),
-                       F.max("rank").alias("max_rank"),
-                       F.countDistinct("bucket").alias("n_buckets")) \
-            .first()
-        self.progress("publish", {"rows": agg["n"], "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_docs": agg["n"],
-                            "max_rank": agg["max_rank"],
-                            "buckets_used": agg["n_buckets"],
-                            "gap_free": agg["max_rank"] == agg["n"] - 1}}
+        agg = self._publish(frame, output_path).agg(   # read-back
+            F.count(F.lit(1)).alias("n"),
+            F.max("rank").alias("max_rank"),
+            F.countDistinct("bucket").alias("n_buckets")).first()
+        return [frame], {"n_docs": agg["n"],
+                         "max_rank": agg["max_rank"],
+                         "buckets_used": agg["n_buckets"],
+                         "gap_free": agg["max_rank"] == agg["n"] - 1}, \
+            agg["n"]
 
     def _run_unimax_mix(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+                        output_path: str) -> Handled:
         """'unimax the language mix with a budget of 50000 tokens, at
         most 2 epochs': UniMax epoch-capped allocation
         (:func:`operators.sampling.unimax_allocation`) of the token
@@ -3640,29 +2518,19 @@ class Pipeline:
         equal-share — which is the number a mixing decision actually
         reads; a missing budget rejects actionably (the epoch cap
         alone does not determine an allocation)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            unimax_allocation,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
+        # 'is None', not a table requirement: a budget of 0 is a
+        # budget
         if plan.get("budget") is None:
-            return {"status": "rejected",
-                    "reason": "unimax needs a token budget "
-                              "('... with a budget of 1000000 tokens')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected("unimax needs a token budget "
+                           "('... with a budget of 1000000 tokens')")
         docs = Catalog(self.spark, source_dir).documents
         strata = plan["strata"]
         if strata not in docs.columns:
-            return {"status": "rejected",
-                    "reason": f"documents table has no {strata!r} column",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        frame = unimax_allocation(docs, plan["budget"],
-                                  plan["max_epochs"], strata_col=strata)
+            raise Rejected(f"documents table has no {strata!r} column")
+        frame = SA.unimax_allocation(docs, plan["budget"],
+                                     plan["max_epochs"], strata_col=strata)
         self.progress("allocate", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._publish(frame, output_path)      # read-back
         per = (back.groupBy(strata)
                .agg(F.first("epochs").alias("epochs"),
                     F.count(F.lit(1)).alias("n_docs"),
@@ -3672,14 +2540,11 @@ class Pipeline:
                              "copies": r["copies"],
                              "saturated": r["epochs"] >= plan["max_epochs"]}
                  for r in per}
-        self.progress("publish", {"rows": sum(a["n_docs"]
-                                              for a in alloc.values()),
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "allocation": alloc}}
+        return [frame], {"allocation": alloc}, \
+            sum(a["n_docs"] for a in alloc.values())
 
     def _run_dsir_select(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+                         output_path: str) -> Handled:
         """'importance resample toward src18': fit the DSIR log-ratio
         table with the named source as the in-pool target domain
         (one-scan ``target_flag`` path), score every document, and
@@ -3691,36 +2556,21 @@ class Pipeline:
         corpus's actual source census (tiny distinct collect) so a
         typo rejects with a reason instead of silently weighting
         against an empty target."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            dsir_logratio_table,
-            dsir_weights,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         docs = Catalog(self.spark, source_dir).documents
-        tgt = plan.get("target_source")
-        if not tgt:
-            return {"status": "rejected",
-                    "reason": "dsir needs a target domain "
-                              "('... toward <source>')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        tgt = plan["target_source"]
         sources = {r["source"] for r in
                    docs.select("source").distinct().collect()}
         if tgt not in sources:
-            return {"status": "rejected",
-                    "reason": f"unknown target source {tgt!r}; corpus "
-                              f"has {sorted(sources)[:8]}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        table = dsir_logratio_table(
+            raise Rejected(f"unknown target source {tgt!r}; corpus "
+                           f"has {sorted(sources)[:8]}")
+        table = SA.dsir_logratio_table(
             docs.withColumn("__t", F.col("source") == tgt),
             target_flag="__t")
         # persist: the weights frame feeds up to three actions (the
         # totals aggregate, the parquet write, and the above-mean
         # count) — without it the gram-explode pipeline recomputes
         # per action
-        weights = dsir_weights(docs, table).persist()
+        weights = SA.dsir_weights(docs, table).persist()
         # above-mean cut with exact integer arithmetic: broadcast the
         # 1-row totals and keep weight*n > total (no doubles, no
         # order dependence). decimal(38,0) keeps the product exact
@@ -3740,16 +2590,157 @@ class Pipeline:
         frame = above if plan.get("select") else weights
         self.progress("weight", {"params": dict(plan)})
         try:
-            frame.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
-            n_rows = back.count()
+            n_rows = self._publish(frame, output_path).count()  # read-back
             n_sel = n_rows if plan.get("select") else above.count()
         finally:
             weights.unpersist()
-        self.progress("publish", {"rows": n_rows, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "rows": n_rows, "above_mean": n_sel}}
+        return [frame], {"rows": n_rows, "above_mean": n_sel}, n_rows
+
+
+@dataclass(frozen=True)
+class DataopsTarget:
+    """One dataops target: its handler, plus the plan key it cannot
+    run without and the rejection text when that key is missing
+    (``{field}`` placeholders fill from the plan)."""
+
+    handler: Callable[..., Handled]
+    requires: Optional[str] = None
+    reason: str = ""
+
+
+_P = Pipeline
+# every target parse_dataops_query can return -> its handler. Adding a
+# target is one entry here, one `_run_*` handler and one parser clause.
+DATAOPS_TARGETS: dict[str, DataopsTarget] = {
+    "corpus_to_shards": DataopsTarget(_P._run_corpus_to_shards),
+    "ingest_crawl": DataopsTarget(
+        _P._run_ingest_crawl, "crawl_path",
+        "crawl ingest needs a path ('... the crawl at /path')"),
+    "ingest_pdfs": DataopsTarget(
+        _P._run_ingest_pdfs, "pdf_path",
+        "pdf ingest needs a path ('... the pdfs at /path')"),
+    "ingest_archives": DataopsTarget(
+        _P._run_ingest_archives, "archive_path",
+        "archive ingest needs a path ('... the zip at /path')"),
+    "corpus_diff": DataopsTarget(
+        _P._run_corpus_diff, "snapshot_path",
+        "corpus diff needs a snapshot path ('... against the snapshot "
+        "at /path')"),
+    **{f"{m}_dedup": DataopsTarget(_P._run_media_dedup)
+       for m in ("image", "audio", "video")},
+    **{f"{m}_probe": DataopsTarget(
+        _P._run_media_probe, "snapshot_path",
+        "{modality} probe needs a snapshot path ('... against the "
+        "snapshot at /path')") for m in ("image", "audio", "video")},
+    **{f"{m}_containment": DataopsTarget(_P._run_containment)
+       for m in ("video", "audio")},
+    "containment_probe": DataopsTarget(
+        _P._run_containment_probe, "snapshot_path",
+        "{modality} containment probe needs a snapshot path ('... "
+        "sharing frames with the snapshot at /path')"),
+    "neardup_probe": DataopsTarget(
+        _P._run_neardup_probe, "snapshot_path",
+        "near-dup probe needs a snapshot path ('... against the band "
+        "snapshot at /path')"),
+    "band_snapshot": DataopsTarget(_P._run_band_snapshot),
+    "incremental_dedup": DataopsTarget(
+        _P._run_incremental_dedup, "snapshot_path",
+        "incremental dedup needs a snapshot path ('... against the "
+        "seen snapshot at /path')"),
+    "substring_dedup": DataopsTarget(_P._run_substring_dedup),
+    "passage_snapshot": DataopsTarget(_P._run_passage_snapshot),
+    "passage_probe": DataopsTarget(
+        _P._run_passage_probe, "snapshot_path",
+        "passage probe needs a snapshot path ('against the passage "
+        "snapshot at /path')"),
+    "domain_rank": DataopsTarget(
+        _P._run_domain_rank, "edges_path",
+        "domain ranking needs a link graph path ('by the link graph at "
+        "/path' — a parquet of (src, dst) domain edges)"),
+    "link_graph_build": DataopsTarget(
+        _P._run_link_graph_build, "crawl_path",
+        "link-graph build needs a crawl path ('from the crawl at "
+        "/path')"),
+    "compact_store": DataopsTarget(
+        _P._run_compact_store, "store_path",
+        "compaction needs a store path ('compact the snapshot at "
+        "/path')"),
+    "license_scan": DataopsTarget(_P._run_license_scan),
+    "bin_pack": DataopsTarget(_P._run_bin_pack),
+    "embed_documents": DataopsTarget(_P._run_embed_documents),
+    "chunk_documents": DataopsTarget(_P._run_chunk_documents),
+    "corpus_census": DataopsTarget(_P._run_corpus_census),
+    "tokenize_pack": DataopsTarget(_P._run_tokenize_pack),
+    "tokenizer_train": DataopsTarget(_P._run_tokenizer_train),
+    "tokenizer_stats": DataopsTarget(
+        _P._run_tokenizer_stats, "tokenizer_path",
+        "tokenizer stats need a tokenizer path ('... with the "
+        "tokenizer at /path')"),
+    "classifier_train": DataopsTarget(_P._run_classifier_train),
+    "classifier_score": DataopsTarget(
+        _P._run_classifier_score, "model_path",
+        "scoring needs a model path ('with the classifier at /path')"),
+    "semantic_dedup": DataopsTarget(_P._run_semantic_dedup),
+    "cluster_corpus": DataopsTarget(_P._run_cluster_corpus),
+    "cluster_assign": DataopsTarget(
+        _P._run_cluster_assign, "centers_path",
+        "cluster_assign needs 'clusters at <path>'"),
+    "verify_shards": DataopsTarget(
+        _P._run_verify_shards, "shards_path",
+        "verify_shards needs 'shards at <path>'"),
+    "data_card": DataopsTarget(_P._run_data_card),
+    "decontaminate": DataopsTarget(
+        _P._run_decontaminate, "benchmark_path",
+        "decontamination needs a benchmark path ('... against the "
+        "benchmark at /path')"),
+    "decontaminate_spans": DataopsTarget(
+        _P._run_decontaminate_spans, "benchmark_path",
+        "span decontamination needs a benchmark path ('against the "
+        "benchmark at /path')"),
+    "retrieve": DataopsTarget(
+        _P._run_retrieve, "queries",
+        "retrieval needs at least one quoted query string ('search the "
+        "corpus for \"...\"')"),
+    "hybrid_search": DataopsTarget(
+        _P._run_hybrid_search, "doc_ids",
+        "hybrid search needs document ids ('like doc 42')"),
+    "bm25_index_build": DataopsTarget(_P._run_bm25_index_build),
+    "bm25_index_append": DataopsTarget(
+        _P._run_bm25_index_append, "index_path",
+        "index append needs an index path ('... to the retrieval index "
+        "at /path')"),
+    "corpus_store_build": DataopsTarget(_P._run_corpus_store_build),
+    "webdataset_write": DataopsTarget(_P._run_webdataset_write),
+    "corpus_rebucket": DataopsTarget(
+        _P._run_corpus_rebucket, "store_path",
+        "rebucket needs a store path ('rebucket the corpus store at "
+        "/path')"),
+    "corpus_upsert": DataopsTarget(
+        _P._run_corpus_upsert, "store_path",
+        "corpus upsert needs a store path ('... into the corpus store "
+        "at /path')"),
+    "ann_search": DataopsTarget(_P._run_ann_search),
+    "ann_index_build": DataopsTarget(_P._run_ann_index_build),
+    "ann_index_append": DataopsTarget(
+        _P._run_ann_index_append, "index_path",
+        "index append needs an index path ('... to the index at "
+        "/path')"),
+    "ann_recall": DataopsTarget(
+        _P._run_ann_recall, "index_path",
+        "recall estimation needs an index path ('... the ann index at "
+        "/path')"),
+    "ann_tune": DataopsTarget(
+        _P._run_ann_tune, "index_path",
+        "index tuning needs an index path ('... the ann index at "
+        "/path')"),
+    "split_corpus": DataopsTarget(_P._run_split_corpus),
+    "dsir_select": DataopsTarget(
+        _P._run_dsir_select, "target_source",
+        "dsir needs a target domain ('... toward <source>')"),
+    "temperature_mix": DataopsTarget(_P._run_temperature_mix),
+    "unimax_mix": DataopsTarget(_P._run_unimax_mix),
+    "shuffle_order": DataopsTarget(_P._run_shuffle_order),
+}
 
 
 # dataops NL routing: deterministic keyword/number extraction, mirroring

@@ -72,18 +72,21 @@ Runner = Callable[[str, dict, Callable[[str, dict], None]], dict]
 def pipeline_runner(pipeline_factory) -> Runner:
     """Adapt a ``Pipeline`` factory (``progress_fn -> Pipeline``) to
     the service's runner signature, routing dataops-intent queries to
-    ``run_dataops`` when the request options name the corpus dirs."""
+    ``run_dataops`` when the request options name the corpus dirs, and
+    every ``explain:`` query to its dry-run face (never a real run)."""
     from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        EXPLAIN_RE,
         parse_dataops_query,
     )
 
     def run(query: str, options: dict,
             progress: Callable[[str, dict], None]) -> dict:
         pipe = pipeline_factory(progress)
-        if (options.get("source_dir") and options.get("output_path")
-                and parse_dataops_query(query) is not None):
-            return pipe.run_dataops(query, options["source_dir"],
-                                    options["output_path"])
+        if ((options.get("source_dir") and options.get("output_path")
+                and parse_dataops_query(query) is not None)
+                or EXPLAIN_RE.match(query)):
+            return pipe.run_dataops(query, options.get("source_dir"),
+                                    options.get("output_path"))
         return pipe.run(query)
 
     return run

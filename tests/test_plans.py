@@ -1275,6 +1275,16 @@ def test_cli_dataops_route(spark, sf_dir, tmp_path, capsys):
     assert main(["get AAPL prices", "--dataops", "--quiet",
                  "--sf-dir", sf_dir, "--out", str(tmp_path / "x")]) == 1
 
+    # a dry run that printed its plan is a success
+    capsys.readouterr()
+    assert main(["explain: curate and dedup the corpus into 4 shards",
+                 "--dataops", "--quiet", "--sf-dir", sf_dir,
+                 "--out", str(tmp_path / "dry")]) == 0
+    summary = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["status"] == "explained"
+    assert summary["reports"]["plan"]["target"] == "corpus_to_shards"
+    assert not _os.path.exists(str(tmp_path / "dry"))
+
 
 def test_parse_dataops_dsir_target():
     from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
@@ -3019,3 +3029,109 @@ def test_webdataset_nl_face(spark, sf_dir, tmp_path):
     man = spark.read.parquet(rep["manifest_path"])
     assert man.count() == 2
     assert man.agg(F.sum("rows")).first()[0] == rep["rows_written"]
+
+
+# one query per required-key table entry that routes to the target but
+# names no path (or no ids / quoted query / domain)
+_MISSING_KEY_QUERIES = {
+    "ingest_crawl": "extract text from the crawl",
+    "ingest_pdfs": "extract text from the pdfs",
+    "ingest_archives": "extract text from the zip",
+    "corpus_diff": "diff the corpus against the previous snapshot",
+    "image_probe": "flag the new images against the snapshot",
+    "audio_probe": "flag the new audio clips against the snapshot",
+    "video_probe": "flag the new videos against the snapshot",
+    "containment_probe": "flag the new videos sharing frames with the "
+                         "snapshot",
+    "neardup_probe": "flag near-duplicate documents against the band "
+                     "snapshot",
+    "incremental_dedup": "dedup the batch against the seen snapshot",
+    "passage_probe": "flag duplicated passages against the passage "
+                     "snapshot",
+    "domain_rank": "rank the domains by the link graph",
+    "link_graph_build": "build the link graph from the crawl",
+    "compact_store": "compact the snapshot",
+    "tokenizer_stats": "report tokenizer stats",
+    "classifier_score": "score the corpus with the classifier",
+    "cluster_assign": "assign the new embeddings to the clusters",
+    "verify_shards": "verify the shards against the manifest",
+    "decontaminate": "decontaminate the corpus against the benchmark",
+    "decontaminate_spans": "remove benchmark passages from the corpus",
+    "retrieve": "search the corpus for the best docs",
+    "hybrid_search": "find documents using both keywords and embeddings",
+    "bm25_index_append": "add the new documents to the retrieval index",
+    "corpus_rebucket": "rebucket the corpus store",
+    "corpus_upsert": "upsert the batch into the corpus store",
+    "ann_index_append": "append the new vectors to the index",
+    "ann_recall": "estimate the recall of the ann index",
+    "ann_tune": "tune the ann index for recall 0.9",
+    "dsir_select": "importance resample the corpus",
+}
+
+
+@pytest.mark.parametrize("target", sorted(_MISSING_KEY_QUERIES))
+def test_required_key_rejection(spark, sf_dir, tmp_path, target):
+    """A query that routes to a target but omits the plan key the
+    target requires is rejected by the runner with the entry's own
+    text, echoes the plan, and writes nothing."""
+    import os
+
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        DATAOPS_TARGETS,
+        parse_dataops_query,
+    )
+
+    query = _MISSING_KEY_QUERIES[target]
+    plan = parse_dataops_query(query)
+    assert plan["target"] == target
+    entry = DATAOPS_TARGETS[target]
+    assert not plan.get(entry.requires)
+    out = str(tmp_path / "out")
+    res = Pipeline(spark, FixtureFetcher(spark, sf_dir)).run_dataops(
+        query, sf_dir, out)
+    assert res["status"] == "rejected"
+    assert entry.reason.format_map(plan) in res["reason"]
+    assert res["reports"]["plan"] == plan
+    assert res["outputs"] == []
+    assert not os.path.exists(out)
+
+
+def test_parsed_targets_are_table_keys():
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        DATAOPS_TARGETS,
+        parse_dataops_query,
+    )
+    queries = list(_MISSING_KEY_QUERIES.values()) + [
+        "curate and dedup the corpus into 4 shards",
+        "dedup the images", "dedup the audio clips", "dedup the videos",
+        "find videos containing clips of each other", "audio containment",
+        "build a near-dup band snapshot of the corpus",
+        "remove duplicated passages across the corpus",
+        "build a passage snapshot of the corpus",
+        "license audit the corpus",
+        "bin pack the corpus into bins of 1024 tokens",
+        "embed the documents, 128 dimensions",
+        "chunk the documents for RAG, size 64 stride 48",
+        "census the corpus",
+        "tokenize the corpus and pack 512-token sequences",
+        "train a bpe tokenizer on the corpus, 300 merges, and save it",
+        "train a quality classifier on the corpus and save it",
+        "semantically dedup the corpus",
+        "cluster the embeddings into 12 topics",
+        "generate a data card for the corpus",
+        "build a retrieval index over the corpus",
+        "build a bucketed corpus store, 32 buckets",
+        "export the corpus as webdataset, 8 shards",
+        "find the 10 nearest neighbors for each document",
+        "build an ann index over the embeddings, 64 lists",
+        "split the corpus into train/val/test 80/10/10",
+        "flatten the language mix with temperature 0.5",
+        "unimax the language mix with a budget of 50000 tokens",
+        "shuffle the corpus for training, epoch 3",
+    ]
+    targets = {parse_dataops_query(q)["target"] for q in queries}
+    assert targets <= set(DATAOPS_TARGETS)
+    assert set(_MISSING_KEY_QUERIES) == {
+        name for name, entry in DATAOPS_TARGETS.items() if entry.requires}
+    # the examples reach every entry, so the check covers the table
+    assert targets == set(DATAOPS_TARGETS)

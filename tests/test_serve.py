@@ -309,6 +309,27 @@ def test_http_run_real_dataops_pipeline(spark, sf_dir, tmp_path):
         assert resp3.status in (403, 404)   # contained either way
         assert _req(port, "GET",
                     "/api/pipeline/download/nope/f.bin")[0] == 404
+
+        # a finance 'explain:' is a dry run too: the explain face
+        # answers, and the finance lifecycle never fetches
+        code, resp = _req(port, "POST", "/api/pipeline/run", {
+            "query": "explain: Get AAPL, MSFT daily stock prices with rsi",
+            "options": {"source_dir": sf_dir,
+                        "output_path": str(tmp_path / "never")}})
+        assert code == 200
+        run_id = resp["run_id"]
+        _wait_status(port, run_id, {"completed"})
+        code, results = _req(port, "GET",
+                             f"/api/pipeline/results/{run_id}")
+        assert code == 200 and results["status"] == "explained"
+        assert results["reports"]["note"] == "not a dataops query"
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=60)
+        conn.request("GET", f"/api/pipeline/events/{run_id}")
+        raw = conn.getresponse().read().decode()
+        conn.close()
+        stages = [json.loads(line[6:])["stage"]
+                  for line in raw.splitlines() if line.startswith("data: ")]
+        assert "fetch" not in stages and stages[0] == "plan"
     finally:
         server.shutdown()
 
