@@ -33,6 +33,7 @@ from typing import Any, Callable, Optional, Protocol, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark import scope
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.functions.compiler import apply_features
 from dynamic_etl_pipeline_thesis_ii_spark.functions.dsl import validate_dsl
@@ -263,6 +264,7 @@ class Pipeline:
         return out
 
     # -- full run ----------------------------------------------------------
+    @scope.owned()
     def run(self, query: str) -> dict:
         resp, plan = self.plan(query)
         if not resp.proceed:
@@ -320,6 +322,7 @@ class Pipeline:
         }
 
     # -- dataops targets: NL query -> table entry -> handler -> sink ------
+    @scope.owned()
     def run_dataops(self, query: str, source_dir: str,
                     output_path: str) -> dict:
         """Plan-level training-data target: NL query -> typed dataops
@@ -403,16 +406,13 @@ class Pipeline:
             n_shards=plan["n_shards"], n_buckets=plan["n_buckets"],
             tokenizer=plan["tokenizer"])
         self.progress("curate", {"params": dict(plan)})
-        try:
-            # the frame's persisted `shard` column IS the writer's hash;
-            # drop it and let write_shards recompute + verify placement
-            sink_report = sinks.write_shards(
-                frame.drop("shard"), output_path,
-                n_shards=plan["n_shards"], key_col="id",
-                shuffle_salt=plan.get("shuffle_salt"), verify=True,
-                manifest=plan.get("manifest", False))
-        finally:
-            dataops_suite.release_shared_caches()
+        # the frame's persisted `shard` column IS the writer's hash;
+        # drop it and let write_shards recompute + verify placement
+        sink_report = sinks.write_shards(
+            frame.drop("shard"), output_path,
+            n_shards=plan["n_shards"], key_col="id",
+            shuffle_salt=plan.get("shuffle_salt"), verify=True,
+            manifest=plan.get("manifest", False))
         return [frame], {"sink": sink_report}, sink_report.get("rows_written")
 
     def _run_incremental_dedup(self, plan: dict, source_dir: str,
@@ -824,7 +824,7 @@ class Pipeline:
         # fingerprint ONCE (the payload decode dominates this target's
         # cost) and share the frame between the pair join, the kept-row
         # anti-join and the persisted snapshot
-        fps = fingerprint(media).persist()
+        fps = scope.persist(fingerprint(media))
         n_decodable = fps.count()
         cap: dict = {}
         pairs = D.hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
@@ -845,7 +845,6 @@ class Pipeline:
             D.hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
                                 cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
-        fps.unpersist()
         return [kept], {"rows_in": n_in, dec_key: n_decodable,
                         "rows_kept": n_kept, "cap_telemetry": cap,
                         "snapshot_path_out": snap}, n_kept
@@ -876,7 +875,7 @@ class Pipeline:
                 self.spark, plan["snapshot_path"])
         media = self._media(source_dir)
         n_in = media.count()
-        fps = fingerprint(media).persist()
+        fps = scope.persist(fingerprint(media))
         n_decodable = fps.count()
         pairs = D.incremental_hamming_pairs(fps, banded, **geom)
         self.progress("media_probe", {"params": dict(plan),
@@ -918,7 +917,6 @@ class Pipeline:
             report.update({"snapshot_rows_before": n_before,
                            "snapshot_rows_after": n_after,
                            f"{noun}_appended": n_appended})
-        fps.unpersist()
         return [pairs], report, n_pairs
 
     def _run_containment(self, plan: dict, source_dir: str,
@@ -946,7 +944,7 @@ class Pipeline:
         # between the pair rollup and the persisted snapshot
         fh = hashes_fn(media)
         idx_col = fh.columns[1]
-        fh = fh.withColumnRenamed(idx_col, "idx").persist()
+        fh = scope.persist(fh.withColumnRenamed(idx_col, "idx"))
         n_rows = fh.count()
         n_decodable = fh.select("id").distinct().count()
         cap: dict = {}
@@ -965,7 +963,6 @@ class Pipeline:
             D.hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
                                 cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
-        fh.unpersist()
         return [pairs], {"rows_in": n_in,
                          "items_decodable": n_decodable,
                          "subitem_rows": n_rows,
@@ -996,7 +993,7 @@ class Pipeline:
         media = self._media(source_dir)
         n_in = media.count()
         fh = hashes_fn(media)
-        fh = fh.withColumnRenamed(fh.columns[1], "idx").persist()
+        fh = scope.persist(fh.withColumnRenamed(fh.columns[1], "idx"))
         n_decodable = fh.select("id").distinct().count()
         pairs = M.incremental_containment_pairs(
             fh, banded, min_shared=plan["min_shared"],
@@ -1039,7 +1036,6 @@ class Pipeline:
             report.update({"snapshot_rows_before": n_before,
                            "snapshot_rows_after": n_after,
                            f"{noun}_appended": n_appended})
-        fh.unpersist()
         return [pairs], report, n_pairs
 
     def _run_band_snapshot(self, plan: dict, source_dir: str,
@@ -2570,7 +2566,7 @@ class Pipeline:
         # totals aggregate, the parquet write, and the above-mean
         # count) — without it the gram-explode pipeline recomputes
         # per action
-        weights = SA.dsir_weights(docs, table).persist()
+        weights = scope.persist(SA.dsir_weights(docs, table))
         # above-mean cut with exact integer arithmetic: broadcast the
         # 1-row totals and keep weight*n > total (no doubles, no
         # order dependence). decimal(38,0) keeps the product exact
@@ -2589,11 +2585,8 @@ class Pipeline:
                  .select("id", "n_grams", "weight_micro"))
         frame = above if plan.get("select") else weights
         self.progress("weight", {"params": dict(plan)})
-        try:
-            n_rows = self._publish(frame, output_path).count()  # read-back
-            n_sel = n_rows if plan.get("select") else above.count()
-        finally:
-            weights.unpersist()
+        n_rows = self._publish(frame, output_path).count()  # read-back
+        n_sel = n_rows if plan.get("select") else above.count()
         return [frame], {"rows": n_rows, "above_mean": n_sel}, n_rows
 
 

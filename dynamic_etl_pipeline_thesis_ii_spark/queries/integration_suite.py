@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark import scope
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity_join as SJ
 from dynamic_etl_pipeline_thesis_ii_spark.operators import union_engine as U
@@ -255,8 +256,6 @@ def q_greedy_tail(spark, sf_dir):
     # pattern). The simjoin branch is eager-checkpointed (recomputed
     # every invocation); the integrate branch's summary is a 3-row
     # driver frame already. Rows, schema and union order unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _sj_branch():
         return (q_simjoin_full(spark, sf_dir).select(
             F.lit("simjoin_full").alias("branch"),
@@ -276,10 +275,7 @@ def q_greedy_tail(spark, sf_dir):
             F.lit(None).cast("double").alias("v3"),
             F.lit(None).cast("double").alias("v4"))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sj_f = pool.submit(_sj_branch)
-        integ_f = pool.submit(_integ_branch)
-        sj, integ = sj_f.result(), integ_f.result()
+    sj, integ = scope.overlap(spark, _sj_branch, _integ_branch)
     return sj.unionByName(integ)
 
 

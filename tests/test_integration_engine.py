@@ -313,6 +313,22 @@ def test_pipeline_e2e_query_face(spark, sf_dir):
     assert out.count() > 0
 
 
+def test_pipeline_run_leaves_no_persisted_frames(spark, sf_dir):
+    """A finance run releases what it persisted (integrate()'s
+    early-terminated group) before it returns."""
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        FixtureFetcher,
+        Pipeline,
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    result = Pipeline(spark, FixtureFetcher(spark, sf_dir)).run(
+        "Get AAPL daily stock prices with 20-day SMA and RSI")
+    assert result["status"] == "complete", result
+    # the context cleaner may drop older RDDs meanwhile; none may be added
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_greedy_tail_query_face(spark, sf_dir):
     """Both rows-only branches (exact greedy simjoin + integrate
     orchestration) still execute and contribute rows."""

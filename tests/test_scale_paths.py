@@ -901,21 +901,40 @@ def test_ivf_index_reuse_and_parquet_roundtrip(spark, sf_dir, tmp_path):
     assert reloaded == direct
 
 
-def test_shared_caches_tracked_and_released(spark, sf_dir):
+def test_shared_caches_tracked_and_released(spark, sf_dir, monkeypatch):
     """Queries that persist shared frames register them; harnesses can
     release between queries so executor memory stays flat — and a
     release with nothing tracked is a no-op."""
+    import contextvars
+
+    from dynamic_etl_pipeline_thesis_ii_spark import scope
     from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite as DS
-    DS.release_shared_caches()            # clean slate, idempotent
-    assert not DS._SHARED_CACHES
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def materialized(df):
+        entry = cache.lookupCachedData(df._jdf)
+        return entry.isDefined() and entry.get().cachedRepresentation() \
+            .cacheBuilder().isCachedColumnBuffersLoaded()
+
+    persisted, persist = [], scope.persist
+
+    def recording(df):
+        persisted.append(df)
+        return persist(df)
+
+    monkeypatch.setattr(scope, "persist", recording)
+    DS.release_shared_caches()            # clean slate
     df = DS.q_dedup_neardup_pairs(spark, sf_dir)
-    assert DS._SHARED_CACHES              # the shingle base registered
-    cached = DS._SHARED_CACHES[-1]
+    [shingles] = [f for f in persisted if f.columns == ["id", "s"]]
+    assert shingles.storageLevel.useMemory    # the shingle base registered
     df.count()
-    assert cached.storageLevel.useMemory  # actually persisted
+    assert materialized(shingles)             # actually persisted
+    # a request with nothing tracked releases nothing
+    contextvars.Context().run(DS.release_shared_caches)
+    assert materialized(shingles)
     DS.release_shared_caches()
-    assert not DS._SHARED_CACHES
-    assert not cached.storageLevel.useMemory  # actually unpersisted
+    assert not shingles.storageLevel.useMemory  # actually unpersisted
+    assert not cache.lookupCachedData(shingles._jdf).isDefined()
 
 
 def test_pq_train_guards_and_layout_determinism(spark, sf_dir):
